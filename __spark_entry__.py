@@ -10,7 +10,7 @@ for the operator-by-operator mapping); this module is a thin adapter.
 
 ``MANIFEST.json`` (regenerate: ``python scripts/gen_manifest.py``)
 groups the registry family → query names so a driver sampling K of the
-250 queries can STRATIFY by family and hit every family each round; it
+331 queries can STRATIFY by family and hit every family each round; it
 also records which entries are oracle-hash-checked vs rows-only
 (currently: none rows-only). The parity suite asserts the committed
 manifest matches the live registry.

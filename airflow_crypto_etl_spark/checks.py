@@ -75,10 +75,9 @@ def expect_schema(df: DataFrame, expected: dict[str, str]) -> None:
                            f"{ {k: actual.get(k) for k in missing} }")
 
 
-def run_suite(df: DataFrame, expectations: list) -> DataFrame:
-    """Evaluate all row-level expectations in one aggregation pass;
-    uniqueness expectations add one distinct-count each (unavoidable
-    extra shuffle, still one job). Returns (check, n_failed, passed)."""
+def _suite_agg(df: DataFrame, expectations: list) -> tuple[DataFrame, list[str]]:
+    """The suite as one wide aggregation row: ``__total`` plus one
+    failing-row count per expectation (names returned in order)."""
     row_exps = [e for e in expectations if isinstance(e, Expectation)]
     uniq_exps = [e for e in expectations if isinstance(e, UniqueExpectation)]
     aggs = [F.count(F.lit(1)).alias("__total")]
@@ -93,8 +92,14 @@ def run_suite(df: DataFrame, expectations: list) -> DataFrame:
         # duplicates); wrapping in a struct keeps them countable.
         key = F.struct(*[F.col(c) for c in e.cols])
         aggs.append((F.count(F.lit(1)) - F.count_distinct(key)).alias(e.name))
-    wide = df.agg(*aggs)
-    names = [e.name for e in row_exps + uniq_exps]
+    return df.agg(*aggs), [e.name for e in row_exps + uniq_exps]
+
+
+def run_suite(df: DataFrame, expectations: list) -> DataFrame:
+    """Evaluate all row-level expectations in one aggregation pass;
+    uniqueness expectations add one distinct-count each (unavoidable
+    extra shuffle, still one job). Returns (check, n_failed, passed)."""
+    wide, names = _suite_agg(df, expectations)
     stacked = wide.selectExpr(
         "stack({n}, {pairs}) as (check, n_failed)".format(
             n=len(names), pairs=", ".join(f"'{n}', {n}" for n in names)
@@ -103,21 +108,32 @@ def run_suite(df: DataFrame, expectations: list) -> DataFrame:
     return stacked.withColumn("passed", F.col("n_failed") == 0)
 
 
-def enforce(df: DataFrame, expectations: list) -> None:
-    """Task-abort behavior: raise CheckFailure listing every failed check."""
-    report = run_suite(df, expectations).filter(~F.col("passed")).collect()
-    if report:
-        raise CheckFailure(
-            "; ".join(f"{r['check']}: {r['n_failed']} failing rows" for r in report)
-        )
+def enforce(df: DataFrame, expectations: list) -> int:
+    """Task-abort behavior: raise CheckFailure listing every failed check.
+    Returns the number of rows checked — the same aggregation's total,
+    so callers gate on row counts without another pass."""
+    wide, names = _suite_agg(df, expectations)
+    row = wide.collect()[0]
+    # a null count (empty input) passes, as in run_suite's report
+    failed = [(n, row[n]) for n in names if row[n]]
+    if failed:
+        raise CheckFailure("; ".join(f"{n}: {k} failing rows" for n, k in failed))
+    return row["__total"]
 
 
 def reconcile(src: DataFrame, dst: DataFrame, raise_on_mismatch: bool = True) -> tuple[int, int]:
     """Cross-system row-count reconciliation (`…optimized.py:996-1046`)."""
     a, b = src.count(), dst.count()
-    if raise_on_mismatch and a != b:
-        raise CheckFailure(f"count reconciliation failed: src={a} dst={b}")
+    if raise_on_mismatch:
+        reconcile_counts(a, b)
     return a, b
+
+
+def reconcile_counts(src_rows: int, dst_rows: int) -> None:
+    """The reconcile gate on row counts already in hand (e.g. an
+    ``enforce`` total against a write's observed count)."""
+    if src_rows != dst_rows:
+        raise CheckFailure(f"count reconciliation failed: src={src_rows} dst={dst_rows}")
 
 
 _GE_TYPE_MAP = {
@@ -206,5 +222,12 @@ def freshness(df: DataFrame, partition_col: str, expected_value) -> None:
     """Partition-presence gate (`…optimized.py:1132-1151`): the expected
     partition must exist and be non-empty. Partition pruning makes this
     a metadata-cheap probe on partitioned layouts."""
-    if df.filter(F.col(partition_col) == expected_value).isEmpty():
+    empty = df.filter(F.col(partition_col) == expected_value).isEmpty()
+    freshness_rows(0 if empty else 1, partition_col, expected_value)
+
+
+def freshness_rows(rows: int, partition_col: str, expected_value) -> None:
+    """:func:`freshness` on a row count already in hand for the
+    ``partition_col=expected_value`` partition."""
+    if not rows:
         raise CheckFailure(f"freshness: no rows with {partition_col}={expected_value!r}")

@@ -16,14 +16,27 @@ Scale: each layer reads only its input ``dt=`` partition (partition
 pruning), the Silver transform is narrow (no shuffle), the Gold rollup
 shuffles one row per (coin, dt) after partial aggregation, and writes
 use dynamic partition overwrite for idempotent re-runs.
+
+Job budget: at the reference's size (one 100-record page a day) a
+day's cost is per-job overhead, so :func:`run_pipeline` runs at most 8
+Spark jobs, held by three rules:
+
+- no Python-RDD source for in-memory records: Bronze is a
+  JVM-local relation, parsed by the JSON reader without Python workers;
+- a table is read back with the schema it was written with, so no job
+  infers a parquet footer;
+- one gate aggregation: the Gold quality suite's row total also serves
+  the reconcile and freshness gates.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 from .. import checks
 from ..operators import aggregate as agg_ops
@@ -45,11 +58,19 @@ SILVER_CONTRACT = {
 
 def bronze_ingest(spark: SparkSession, records: list[dict]) -> DataFrame:
     """Bronze from extracted records (S1 feeds this; schema-on-read —
-    pyspark infers from the JSON structure, nothing enforced)."""
+    pyspark infers from the JSON structure, nothing enforced).
+
+    The JSON lines become a JVM-local relation (Arrow, explicit
+    ``value string`` schema so ``[]`` still yields ``struct<>``) and are
+    parsed through the reader's ``Dataset[String]`` entry point: the
+    same inference ``read.json(RDD)`` delegates to, without sending
+    every task through a Python worker."""
     apply_runtime_confs(spark)
     import json
 
-    return spark.read.json(spark.sparkContext.parallelize([json.dumps(r) for r in records]))
+    lines = spark.createDataFrame(pa.table({"value": [json.dumps(r) for r in records]}), "value string")
+    as_strings = getattr(lines._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    return DataFrame(spark._jsparkSession.read().json(as_strings), spark)
 
 
 def bronze_read(spark: SparkSession, lake_root: str, ds: str | None = None) -> DataFrame:
@@ -114,23 +135,36 @@ def gold_expectations() -> list:
 
 
 def run_pipeline(spark: SparkSession, records: list[dict], lake_root: str, ds: str) -> DataFrame:
-    """The full chain for one execution date (the 14-task DAG as three
-    jobs + validation; SURVEY.md §3.1). Returns the Gold frame."""
+    """The full chain for one execution date (the 14-task DAG; SURVEY.md
+    §3.1). Returns the Gold frame read back from the lake.
+
+    At most 8 Spark jobs: Bronze schema inference, the Bronze and
+    Silver writes, the Gold write (2 under AQE: its shuffle, then the
+    write) and one Gold gate aggregation (3 under AQE, one per query
+    stage). No Python-RDD source; Silver and Gold are read back with
+    the schema they were written with (``dt`` still inferred from the
+    path); the row total of :func:`checks.enforce` is reconciled against
+    the Gold write's observed count and must be non-zero (freshness)."""
     bronze = bronze_ingest(spark, records)
     bronze.withColumn("dt", F.lit(ds)).write.mode("overwrite").partitionBy("dt").json(
         os.path.join(lake_root, "bronze", "coins")
     )
     silver = silver_transform(bronze)
     silver_write(silver, lake_root, ds)
-    silver_back = spark.read.parquet(os.path.join(lake_root, "silver", "coins")).filter(
-        F.col("dt") == ds
-    )
+    silver_back = spark.read.schema(silver.schema).parquet(
+        os.path.join(lake_root, "silver", "coins")
+    ).filter(F.col("dt") == ds)
     gold = gold_build(silver_back.drop("dt"), ds)
-    writers.write_partitioned(gold, os.path.join(lake_root, "gold", "coins_daily"), ["dt"])
-    gold_back = spark.read.parquet(os.path.join(lake_root, "gold", "coins_daily")).filter(
-        F.col("dt") == ds
+    written = Observation("gold_written")
+    writers.write_partitioned(
+        gold.observe(written, F.count(F.lit(1)).alias("rows")),
+        os.path.join(lake_root, "gold", "coins_daily"),
+        ["dt"],
     )
-    checks.enforce(gold_back, gold_expectations())
-    checks.reconcile(gold_back, gold)
-    checks.freshness(gold_back, "dt", ds)
+    gold_back = spark.read.schema(gold.drop("dt").schema).parquet(
+        os.path.join(lake_root, "gold", "coins_daily")
+    ).filter(F.col("dt") == ds)
+    rows = checks.enforce(gold_back, gold_expectations())
+    checks.reconcile_counts(rows, written.get["rows"])
+    checks.freshness_rows(rows, "dt", ds)
     return gold_back

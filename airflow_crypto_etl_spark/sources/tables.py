@@ -118,7 +118,9 @@ def _restore_nanos_timestamps(df: DataFrame, cols: tuple[str, ...] = ("ts",)) ->
 # "know what you are timing"). Keyed on (path, mtime, size) so a
 # rewritten file re-infers; for DIRECTORY paths the key also folds in
 # the direct children's (name, mtime, size) — a part file rewritten in
-# place does not bump the directory mtime (r11 ADVICE item 2). Bounded
+# place does not bump the directory mtime (r11 ADVICE item 2) — and,
+# for a child directory (a ``key=val`` partition), its own children's;
+# a flat table's key is unchanged by that one level of recursion. Bounded
 # FIFO so a long-lived session scanning many paths cannot grow it
 # without limit; a schema-supplied read plans the identical scan
 # (parquet is self-describing per file — the footer is still the
@@ -127,16 +129,25 @@ _SCHEMA_CACHE: dict = {}
 _SCHEMA_CACHE_MAX = 256
 
 
+def _listing(path: str, depth: int) -> tuple:
+    """Sorted (name, mtime, size) of a directory's entries; a child
+    directory also carries its own listing while ``depth`` remains."""
+    out = []
+    with os.scandir(path) as it:
+        for e in it:
+            cst = e.stat()
+            entry = (e.name, cst.st_mtime_ns, cst.st_size)
+            if depth and e.is_dir():
+                entry += (_listing(e.path, depth - 1),)
+            out.append(entry)
+    return tuple(sorted(out))
+
+
 def _schema_key(path: str):
     st = os.stat(path)
     key = (path, st.st_mtime_ns, st.st_size)
     if os.path.isdir(path):
-        children = []
-        with os.scandir(path) as it:
-            for e in it:
-                cst = e.stat()
-                children.append((e.name, cst.st_mtime_ns, cst.st_size))
-        key = key + (tuple(sorted(children)),)
+        key = key + (_listing(path, 1),)
     return key
 
 

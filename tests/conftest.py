@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import itertools
 import os
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import duckdb
 import pytest
@@ -57,3 +60,32 @@ def duck():
         )
     yield con
     con.close()
+
+
+
+_job_groups = itertools.count()
+
+
+@contextmanager
+def count_jobs(sc):
+    """Count the Spark jobs started in this thread inside the block: they
+    run under a fresh job group, looked up afterwards through
+    ``statusTracker()`` (which works with the UI off). ``n`` of the
+    yielded object is set when the block exits."""
+    group = f"count-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    got = SimpleNamespace(n=0)
+    try:
+        yield got
+    finally:
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        got.n = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc._jsc.clearJobGroup()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` then ``jobs.n`` is the number of
+    Spark jobs the block started."""
+    return lambda: count_jobs(spark.sparkContext)

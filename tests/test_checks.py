@@ -7,7 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from airflow_crypto_etl_spark import checks
+from airflow_crypto_etl_spark.plans import medallion
+from airflow_crypto_etl_spark.sinks import writers
 from airflow_crypto_etl_spark.sources.tables import load_table
+
+from coin_feed import coin_page
 
 
 def test_run_suite_all_pass(spark, sf_dir):
@@ -72,3 +76,59 @@ def test_unique_expectation_null_keys(spark):
     dup_null = spark.createDataFrame([(None, "a"), (None, "b"), (1, "c")], "k int, v string")
     r = checks.run_suite(dup_null, [checks.expect_unique(["k"])]).collect()[0]
     assert r["n_failed"] == 1 and not r["passed"]
+
+
+def test_enforce_returns_rows_checked(spark, sf_dir):
+    orders = load_table(spark, sf_dir, "orders")
+    exps = [checks.expect_not_null("o_orderkey"), checks.expect_unique(["o_orderkey"])]
+    assert checks.enforce(orders, exps) == orders.count()
+    assert checks.enforce(orders.limit(0), exps) == 0
+
+
+# run_pipeline's gates: the one Gold gate aggregation must raise what
+# enforce, reconcile and freshness raise.
+
+DS = "2026-03-01"
+COINS = [f"coin-{i:03d}" for i in range(12)]
+
+
+def test_pipeline_failing_expectation_raises_enforce_message(spark, tmp_path):
+    records = coin_page(DS, COINS, seed=5)
+    records[3]["current_price"] = 0  # trips avg_price_usd_positive
+    with pytest.raises(checks.CheckFailure, match=r"^avg_price_usd_positive: 1 failing rows$"):
+        medallion.run_pipeline(spark, records, str(tmp_path / "lake"), DS)
+
+
+def test_pipeline_readback_mismatch_raises_reconcile_message(spark, tmp_path, monkeypatch):
+    """A Gold partition that reads back one row more than the write
+    produced (a stray file appended beside the write's output)."""
+    real_write = writers.write_partitioned
+
+    def write_then_append_stray_row(df, path, partition_cols, **kw):
+        real_write(df, path, partition_cols, **kw)
+        if path.endswith("coins_daily"):
+            stray = spark.createDataFrame([("stray-coin", 1.0, 1.0, 1.0, 1.0, DS)], df.schema)
+            stray.write.mode("append").partitionBy(*partition_cols).parquet(path)
+
+    monkeypatch.setattr(writers, "write_partitioned", write_then_append_stray_row)
+    n = len(COINS)
+    with pytest.raises(checks.CheckFailure, match=rf"^count reconciliation failed: src={n + 1} dst={n}$"):
+        medallion.run_pipeline(spark, coin_page(DS, COINS, seed=6), str(tmp_path / "lake"), DS)
+
+
+def test_empty_partition_raises_freshness_message(spark, tmp_path):
+    path = str(tmp_path / "gold")
+    spark.createDataFrame(
+        [("c", 2.0, 1.0, 3.0, 5.0, "2026-02-28")],
+        "coin_id string, avg_price_usd double, min_price_usd double, max_price_usd double, "
+        "avg_market_cap double, dt string",
+    ).write.partitionBy("dt").parquet(path)
+    missing = spark.read.parquet(path).filter(F.col("dt") == DS)
+    rows = checks.enforce(missing, medallion.gold_expectations())
+    assert rows == 0
+    want = rf"^freshness: no rows with dt='{DS}'$"
+    with pytest.raises(checks.CheckFailure, match=want):
+        checks.freshness_rows(rows, "dt", DS)
+    with pytest.raises(checks.CheckFailure, match=want):
+        checks.freshness(missing, "dt", DS)
+    checks.freshness_rows(1, "dt", DS)

@@ -150,3 +150,87 @@ def test_json_quarantine_splits_good_and_malformed(spark, tmp_path):
 
     with _pytest.raises(Exception):
         spark.read.schema(schema).option("mode", "FAILFAST").json(str(p)).collect()
+
+
+# A day's Bronze is a JVM-local relation parsed by the JSON reader's
+# Dataset[String] entry point; it must infer exactly what the Python-RDD
+# reader (spark.read.json over sc.parallelize) infers.
+BRONZE_PARITY_CASES = {
+    "roi_null_then_struct": [
+        {"id": "a", "roi": None, "current_price": 1.5},
+        {"id": "b", "roi": {"times": 2.5, "currency": "usd", "percentage": 150.0}, "current_price": 2},
+    ],
+    "missing_keys": [
+        {"id": "a", "symbol": "aaa"},
+        {"id": "b", "market_cap": 10},
+        {"name": "only a name"},
+    ],
+    "mixed_value_types": [{"v": 1}, {"v": 1.5}, {"v": "text"}, {"v": [1, 2]}, {"v": None}],
+    "non_ascii": [{"id": "ビットコイン", "name": "Ünïcödé ₿", "名前": "币"}, {"id": "ethereum"}],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("case", sorted(BRONZE_PARITY_CASES))
+def test_bronze_ingest_matches_python_rdd_reader(spark, case):
+    import json
+
+    records = BRONZE_PARITY_CASES[case]
+    want = spark.read.json(spark.sparkContext.parallelize([json.dumps(r) for r in records]))
+    got = medallion.bronze_ingest(spark, records)
+    assert got.schema.simpleString() == want.schema.simpleString()
+    assert got.schema == want.schema
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+def test_pipeline_synthetic_days_and_rerun(spark, spark_jobs, tmp_path):
+    """Two seeded days, then a re-run of day 1, on records that need no
+    reference snapshot: per-day Gold rows and values, the returned
+    schema, the Silver sidecar, idempotent lake counts and the job
+    budget of one run_pipeline call."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from airflow_crypto_etl_spark.sinks.writers import read_sidecar
+    from coin_feed import coin_page
+
+    lake = str(tmp_path / "lake")
+    day1 = ("2026-02-01", coin_page("2026-02-01", [f"coin-{i:03d}" for i in range(40)], seed=1))
+    recs2 = coin_page("2026-02-02", [f"coin-{i:03d}" for i in range(5, 50)], seed=2)
+    # three of day 1's rows delivered again with day 2's page: more
+    # records than coins on day 2
+    day2 = ("2026-02-02", recs2 + [{**r, "current_price": r["current_price"] * 1.001} for r in day1[1][5:8]])
+
+    def lake_counts():
+        rd = spark.read
+        return {
+            "bronze": rd.json(f"{lake}/bronze/coins").count(),
+            "silver": rd.parquet(f"{lake}/silver/coins").count(),
+            "gold": rd.parquet(f"{lake}/gold/coins_daily").count(),
+        }
+
+    for ds, records in (day1, day2):
+        gold = medallion.run_pipeline(spark, records, lake, ds)
+        assert gold.schema["dt"].dataType == T.DateType()
+        got = {r["coin_id"]: r for r in gold.collect()}
+        prices: dict[str, list[float]] = {}
+        for r in records:
+            prices.setdefault(r["id"], []).append(float(r["current_price"]))
+        assert sorted(got) == sorted(prices)
+        for c, ps in prices.items():
+            g = got[c]
+            assert g["min_price_usd"] == min(ps) and g["max_price_usd"] == max(ps)
+            assert math.isclose(g["avg_price_usd"], sum(ps) / len(ps), rel_tol=1e-12)
+            assert str(g["dt"]) == ds
+        assert read_sidecar(f"{lake}/silver/coins")["row_count"] == len(records)
+    gold_rows = spark.read.parquet(f"{lake}/gold/coins_daily").groupBy("dt").count().collect()
+    assert {str(r["dt"]): r["count"] for r in gold_rows} == {"2026-02-01": 40, "2026-02-02": 45}
+
+    before = lake_counts()
+    assert before == {"bronze": 40 + 48, "silver": 40 + 48, "gold": 40 + 45}
+    with spark_jobs() as jobs:
+        gold = medallion.run_pipeline(spark, day1[1], lake, day1[0])
+    assert jobs.n <= 8, f"run_pipeline ran {jobs.n} Spark jobs"
+    assert gold.filter(F.col("dt") == day1[0]).count() == 40
+    assert read_sidecar(f"{lake}/silver/coins")["row_count"] == 40
+    assert lake_counts() == before
