@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import CHAR_MOD, GRAM_MOD, KNUTH, MERSENNE_P
+from .layout import widen
 
 # MinHash parameters: K signatures in B bands of R rows (K = B*R).
 MINHASH_K = 16
@@ -120,7 +121,7 @@ def shingles_col(text_col: str, n: int = 3):
 
 def _doc_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     # guard: sequence(0, size-n) is descending (not empty!) when size < n
-    ok = _spread(docs).filter(F.expr(f"size({_tokens_sql(text_col)}) >= {n}"))
+    ok = widen(docs).filter(F.expr(f"size({_tokens_sql(text_col)}) >= {n}"))
     return ok.select(F.col(id_col), F.explode(shingles_col(text_col, n)).alias("shingle"))
 
 
@@ -202,27 +203,9 @@ def minhash_band_array(sig_col):
     return F.expr(f"array({bands})")
 
 
-def _spread(df: DataFrame, spread: bool = True) -> DataFrame:
-    """Widen a narrow scan before CPU-heavy per-doc projections.
-
-    Small/few parquet files arrive as 1-2 input splits; tokenise+hash
-    would then run on as many cores. The former implementation probed
-    ``df.rdd.getNumPartitions()`` to skip the shuffle when already wide,
-    but that forces an RDD conversion (full analyze+optimize pass) on
-    EVERY call — a hidden per-query tax (r4 verdict item 3). Now the
-    decision is the caller's: ``spread=False`` for a corpus already laid
-    out wide (the 100 TB case); the default round-robin repartition is
-    cheap relative to the tokenise+hash CPU it feeds and also levels
-    file-size skew."""
-    if not spread:
-        return df
-    want = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(want)
-
-
 def _doc_shingle_hashes(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, th) — one row per distinct token-n-gram hash per doc."""
-    ok = _spread(docs).filter(F.expr(f"size({_tokens_sql(text_col)}) >= {n}"))
+    ok = widen(docs).filter(F.expr(f"size({_tokens_sql(text_col)}) >= {n}"))
     return ok.select(F.col(id_col), F.explode(shingle_hashes_col(text_col, n)).alias("th"))
 
 
@@ -847,7 +830,7 @@ def passage_dedup(
     exchange-reuse canonicalization — same contract as
     minhash_lsh_pairs)."""
     segs = register_cache(
-        _spread(docs)
+        widen(docs)
         .select(
             F.col(id_col),
             F.posexplode(F.expr(passage_segments_sql(text_col, seg_tokens))).alias(
@@ -914,7 +897,7 @@ def gram_hash_positions(
     fold = "element_at(_th, p)"
     for j in range(1, k):
         fold = f"(({fold}) * 31 + element_at(_th, p + {j})) % {GRAM_MOD}"
-    ok = _spread(docs).filter(F.expr(f"size({_tokens_sql(text_col)}) >= {k}"))
+    ok = widen(docs).filter(F.expr(f"size({_tokens_sql(text_col)}) >= {k}"))
     hashed = ok.select(
         F.col(id_col),
         F.expr(f"transform({_tokens_sql(text_col)}, t -> {_char_hash_sql('t')})").alias(

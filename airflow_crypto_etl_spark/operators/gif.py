@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .layout import payload_rows, widen
+
 _MAX_TABLE = 4096  # 12-bit LZW ceiling, per the GIF spec
 
 
@@ -257,23 +259,9 @@ def gif_geometry(doc_id: int) -> tuple[int, int]:
 def attach_gif_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Give every document a decodable GIF payload (geometry derived
     from the id, same shape as the PPM/PNG/JPEG attach twins)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf[id_col]
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "payload": [make_gif(int(i), *gif_geometry(int(i))) for i in ids],
-                }
-            )
-
-    from .multimodal import fan_out  # lazy: avoids an import cycle
-
-    schema = T.StructType(
-        [docs.schema[id_col], T.StructField("payload", T.BinaryType())]
+    return payload_rows(
+        widen(docs.select(id_col)), lambda i: make_gif(i, *gif_geometry(i))
     )
-    return fan_out(docs.select(id_col)).mapInPandas(batches, schema)
 
 
 def decode_gif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .layout import payload_rows, widen
+
 # --------------------------------------------------------------------------
 # Spec tables (ITU-T T.81 Annex K) — public standard constants.
 # --------------------------------------------------------------------------
@@ -267,8 +269,10 @@ def _extend(v: int, size: int) -> int:
 # table segments, so the canonical reconstruction happens once per
 # process instead of once per frame (it was ~20% of the decode profile;
 # guide §4.5). Values are plain Python lists — list indexing inside the
-# entropy loop is ~3x faster than numpy scalar indexing.
+# entropy loop is ~3x faster than numpy scalar indexing. An entry is
+# ~1 MB, so the cache is FIFO-bounded well above the 4 tables in use.
 _SCAN_LUT_CACHE: dict[bytes, tuple[list[int], list[int]]] = {}
+_SCAN_LUT_CACHE_MAX = 32
 
 
 def _scan_luts(bits: bytes, vals: bytes) -> tuple[list[int], list[int]]:
@@ -292,6 +296,8 @@ def _scan_luts(bits: bytes, vals: bytes) -> tuple[list[int], list[int]]:
             k += 1
         code <<= 1
     out = (sym.tolist(), ln.tolist())
+    if len(_SCAN_LUT_CACHE) >= _SCAN_LUT_CACHE_MAX:
+        _SCAN_LUT_CACHE.pop(next(iter(_SCAN_LUT_CACHE)))
     _SCAN_LUT_CACHE[key] = out
     return out
 
@@ -490,7 +496,16 @@ def decode_jpeg_bytes(b: bytes) -> tuple[int, int, int, bytes]:
     """REAL baseline JPEG decode, stdlib + numpy only. Returns (width,
     height, n_components, row-major interleaved 8-bit pixels — gray or
     RGB). Rejects progressive (SOF2), arithmetic coding, 12-bit,
-    hierarchical, and subsampled frames explicitly."""
+    hierarchical, and subsampled frames explicitly. A truncated stream
+    raises ``ValueError`` too: the parser running off the buffer's end
+    (``IndexError``/``struct.error``) is re-raised as one, chained."""
+    try:
+        return _decode_jpeg(b)
+    except (IndexError, struct.error) as exc:
+        raise ValueError(f"truncated or corrupt JPEG stream: {exc}") from exc
+
+
+def _decode_jpeg(b: bytes) -> tuple[int, int, int, bytes]:
     if b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
     pos = 2
@@ -724,24 +739,10 @@ JPEG_SCHEMA = T.StructType(
 def attach_jpeg_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Give every document a decodable baseline JPEG (8-aligned geometry
     derived from the id, block-constant content per :func:`make_jpeg`)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf[id_col]
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "payload": [
-                        make_jpeg(int(i), 8 * (1 + int(i) % 3), 8 * (1 + int(i) % 2))
-                        for i in ids
-                    ],
-                }
-            )
-
-    from .multimodal import fan_out  # lazy: multimodal imports this module
-
-    schema = T.StructType([docs.schema[id_col], T.StructField("payload", T.BinaryType())])
-    return fan_out(docs.select(id_col)).mapInPandas(batches, schema)
+    return payload_rows(
+        widen(docs.select(id_col)),
+        lambda i: make_jpeg(i, 8 * (1 + i % 3), 8 * (1 + i % 2)),
+    )
 
 
 def _decode_jpeg_rows(doc_ids, payloads):
@@ -812,19 +813,10 @@ def attach_jpeg_color_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFr
     Exercises chroma table SELECTION and the YCbCr→RGB epilogue on the
     registered oracle path, not just in unit tests."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf[id_col]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                y = 64 + 2 * ((3 * i) % 64)
-                cb = 128 + 17 * ((i % 5) - 2)
-                cr = 128 + 17 * ((i % 3) - 1)
-                payloads.append(make_jpeg_color(y, cb, cr, 8 * (1 + i % 2), 8))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        y = 64 + 2 * ((3 * i) % 64)
+        cb = 128 + 17 * ((i % 5) - 2)
+        cr = 128 + 17 * ((i % 3) - 1)
+        return make_jpeg_color(y, cb, cr, 8 * (1 + i % 2), 8)
 
-    from .multimodal import fan_out  # lazy: multimodal imports this module
-
-    schema = T.StructType([docs.schema[id_col], T.StructField("payload", T.BinaryType())])
-    return fan_out(docs.select(id_col)).mapInPandas(batches, schema)
+    return payload_rows(widen(docs.select(id_col)), make)

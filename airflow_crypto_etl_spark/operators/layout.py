@@ -1,5 +1,5 @@
-"""Multi-dimensional data layout: Z-order (Morton) clustering for
-data-skipping scans.
+"""Data layout: Z-order (Morton) clustering for data-skipping scans,
+the widening repartition, and the synthetic-payload generator.
 
 A 100 TB fact table is usually range-partitioned on ONE key (date); a
 query filtering on a second key (customer) then reads every file. A
@@ -9,15 +9,25 @@ parquet min/max footer stats then prune most files for either
 predicate (the technique Delta/Iceberg expose as `OPTIMIZE ZORDER BY`,
 originally Morton 1966).
 
-Everything here is integer bit arithmetic generated as ONE SQL string
+The Z-value is integer bit arithmetic generated as ONE SQL string
 (engine-portable: a DuckDB twin renders the same bits), evaluated
 inside whole-stage codegen — no UDF.
+
+:func:`widen` is the one caller-gated repartition that spreads a narrow
+scan over every core before CPU-heavy per-row work. :func:`payload_rows`
+makes the media attach verbs' payloads inside the task that consumes
+them, so payload bytes never cross an exchange. Nothing here imports
+from the package, so any operator module can import it at top level.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 Z_BITS = 16
 
@@ -63,3 +73,35 @@ def zorder_layout(
     the full range."""
     z = with_zvalue(df, a, b, bits)
     return z.repartitionByRange(num_files, "zval").sortWithinPartitions("zval")
+
+
+def widen(df: DataFrame, spread: bool = True) -> DataFrame:
+    """Round-robin ``df`` onto ``defaultParallelism`` partitions (the
+    session's core count, not a local-mode constant) before CPU-heavy
+    per-row work: a small parquet input arrives as 1-2 splits and would
+    otherwise run on as many cores.
+
+    ``spread=False`` is the 100 TB setting: a corpus-scale scan already
+    has thousands of partitions, and the exchange would be a full extra
+    pass of the corpus for nothing. The choice is the caller's; there is
+    no ``df.rdd.getNumPartitions()`` probe, which would cost an
+    RDD-conversion analyzer pass on every call."""
+    if not spread:
+        return df
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def payload_rows(ids: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """``(id, payload binary)`` rows, ``payload = make(id)``, from a
+    one-column id frame whose field (name, type, nullability) the
+    output keeps. Whether ``ids`` is widened first is the caller's."""
+    id_field = ids.schema.fields[0]
+    name = id_field.name
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            col = pdf[name]
+            yield pd.DataFrame({name: col, "payload": [make(int(i)) for i in col]})
+
+    schema = T.StructType([id_field, T.StructField("payload", T.BinaryType())])
+    return ids.mapInPandas(batches, schema)

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .layout import widen
+
 LSH_PLANES = 8
 
 
@@ -147,27 +149,11 @@ def _book_literal_sql(rows: list, fields: tuple = ("cid", "cv")) -> str:
     return "array(" + ", ".join(parts) + ")"
 
 
-def _spread(df: DataFrame, spread: bool = True) -> DataFrame:
-    """Caller-gated widening repartition (the dedup._spread discipline).
-
-    Small/few parquet files arrive as 1-2 input splits; pairwise cosine
-    scoring would then run on as many cores. ``spread=False`` is the
-    100 TB setting: a corpus-scale scan already yields thousands of
-    partitions, and an unconditional round-robin repartition there is a
-    full extra pass of the corpus through the exchange for zero benefit
-    (r7 verdict item 2). The decision is the caller's — no
-    ``df.rdd.getNumPartitions()`` auto-probe, which would force an
-    RDD-conversion analyzer pass per call (r4 verdict)."""
-    if not spread:
-        return df
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def _normed_base(
     emb: DataFrame, id_col: str, vec_col: str, spread: bool = True
 ) -> DataFrame:
     """(id, double vector, pre-computed norm), optionally spread across
-    cores (see :func:`_spread`).
+    cores (see :func:`.layout.widen`).
 
     The norm is hoisted to a per-ROW projection column below the join,
     so each pairwise cosine costs ONE dot fold plus a divide — versus
@@ -181,7 +167,7 @@ def _normed_base(
     node-identical plan, ~100× fewer py4j round-trips to construct."""
     v = to_double_sql(_bt(vec_col))
     base = emb.selectExpr(_bt(id_col), f"{v} AS v", f"{norm2_sql(v)} AS nrm")
-    return _spread(base, spread)
+    return widen(base, spread)
 
 
 def cosine_pairs(
@@ -208,7 +194,7 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k for the given query vectors: broadcast the Q
     queries against the unit-normalized corpus (map-side — with
-    ``spread=False`` the corpus never shuffles, see :func:`_spread`),
+    ``spread=False`` the corpus never shuffles, see :func:`.layout.widen`),
     then per-query top-k via window."""
     base = _normed_base(emb, id_col, vec_col, spread)
     queries = base.filter(F.col(id_col).isin(query_ids)).select(
@@ -242,7 +228,7 @@ def hard_negatives(
 
     Scale shape = brute_force_topk: the Q anchors broadcast against the
     map-side corpus (with ``spread=False`` the corpus never shuffles —
-    literally; see :func:`_spread`), with the cross-label filter riding
+    literally; see :func:`.layout.widen`), with the cross-label filter riding
     the broadcast-join condition so same-label pairs are dropped before
     any scoring output exists; then per-anchor top-k via a window
     partitioned by query id (bounded Q·corpus/parallelism state per
@@ -259,7 +245,7 @@ def hard_negatives(
     negatives for EVERY training example — millions of anchors — use
     :func:`hard_negatives_lsh`, which replaces the broadcast product
     with an LSH-bucket equi-join."""
-    base = _spread(
+    base = widen(
         emb.selectExpr(
             _bt(id_col),
             f"{_bt(label_col)} AS _lbl",
@@ -429,7 +415,7 @@ def hard_negatives_lsh(
 
     ``anchor_pred`` selects the anchor rows (default: every row — the
     all-anchor mining case)."""
-    base = _spread(
+    base = widen(
         emb.selectExpr(
             _bt(id_col),
             f"{_bt(label_col)} AS _lbl",
@@ -959,7 +945,8 @@ def ivf_index_retrain(
     (id, cid) pairs, run twice (Lloyd round, final assign); the
     vectors never shuffle and driver state stays the bounded
     dim·n_centroids cell collect. Run it when the health monitor says
-    so, not per batch."""
+    so, not per batch. The normalized-corpus cache it registers stays
+    pinned until :func:`dedup.release_caches` frees it."""
     # ONE normalized pass over the corpus feeds BOTH retrain passes
     # (r11 verdict item 2 / guide §1.2): the Lloyd round assigns under
     # the OLD seed book and the rebuild under the NEW trained book —
@@ -971,7 +958,9 @@ def ivf_index_retrain(
     from .dedup import register_cache
 
     emb = register_cache(
-        emb.selectExpr(id_col, f"{to_double_sql(vec_col)} AS {vec_col}")
+        emb.selectExpr(
+            _bt(id_col), f"{to_double_sql(_bt(vec_col))} AS {_bt(vec_col)}"
+        )
     )
     trained = ivf_centroids_trained(
         emb,
@@ -1713,7 +1702,7 @@ def pq_codebook_trained(
     """
     sd = dim // n_sub
     spark = emb.sparkSession
-    base = emb.select(F.col(id_col), F.expr(to_double_sql(vec_col)).alias("v"))
+    base = emb.select(F.col(id_col), F.expr(to_double_sql(_bt(vec_col))).alias("v"))
     # ONE bounded collect of the n_cent seed vectors serves both the
     # broadcast seed book (as a local 1-row relation) and the
     # empty-cell fallback values below — the previous shape aggregated
@@ -1786,7 +1775,7 @@ def pq_encode(
     default seeded book — pass :func:`pq_codebook_trained` for the
     k-means-trained encoding."""
     sd = dim // n_sub
-    base = emb.select(F.col(id_col), F.expr(to_double_sql(vec_col)).alias("v"))
+    base = emb.select(F.col(id_col), F.expr(to_double_sql(_bt(vec_col))).alias("v"))
     cb = codebook if codebook is not None else pq_codebook(emb, n_cent, id_col, vec_col)
     enc = base.crossJoin(F.broadcast(cb))
     return enc.select(
@@ -1928,7 +1917,9 @@ def pq_index_build(
     exact Lloyd round of :func:`pq_codebook_trained`; the encode is
     the map-only :func:`pq_encode` pass), write both to parquet, and
     run :func:`pq_index_lookup` per ingest batch — the corpus is
-    never re-encoded per call."""
+    never re-encoded per call. With ``trained=True`` the normalized-corpus
+    cache it registers stays pinned until :func:`dedup.release_caches`
+    frees it."""
     if trained:
         # ONE normalized pass over the corpus feeds BOTH encode passes
         # (r11 verdict item 2 / guide §1.2): training assigns under the
@@ -1942,7 +1933,9 @@ def pq_index_build(
         from .dedup import register_cache
 
         emb = register_cache(
-            emb.selectExpr(id_col, f"{to_double_sql(vec_col)} AS {vec_col}")
+            emb.selectExpr(
+                _bt(id_col), f"{to_double_sql(_bt(vec_col))} AS {_bt(vec_col)}"
+            )
         )
         cb = pq_codebook_trained(emb, n_sub, n_cent, dim, id_col, vec_col)
     else:
@@ -2303,7 +2296,7 @@ def _ivfpq_resid(
     ((cid, cv) rows — :func:`ivf_centroids_trained` with
     ``metric="l2"``, this stage's assignment metric) overrides the
     id-seeded coarse quantizer (r10 verdict item 1)."""
-    base = emb.select(F.col(id_col), F.expr(to_double_sql(vec_col)).alias("v"))
+    base = emb.select(F.col(id_col), F.expr(to_double_sql(_bt(vec_col))).alias("v"))
     if coarse_rows is not None:
         coarse = coarse_rows.select(
             F.col("cid"), F.expr(to_double_sql("cv")).alias("cv")

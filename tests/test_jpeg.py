@@ -132,8 +132,49 @@ def test_rejections_are_explicit():
         J.decode_jpeg_bytes(bytes(sub))
     # corrupt entropy data -> invalid Huffman code or marker error
     trunc = good[: good.rfind(b"\xff\xd9") - 1]
-    with pytest.raises((ValueError, IndexError)):
+    with pytest.raises(ValueError):
         J.decode_jpeg_bytes(trunc)
+
+
+@pytest.mark.parametrize(
+    "stream",
+    [J.make_jpeg(5, 8, 8), J.make_jpeg_color(64, 94, 111, 8, 8)],
+    ids=["gray_320B", "color_612B"],
+)
+def test_every_truncation_raises_value_error(stream):
+    """Cut the stream after every byte: each prefix that loses any of
+    the header segments or the entropy scan raises the decoder's own
+    ValueError (never IndexError/struct.error), chained to the parser's
+    original error where one was raised. A cut inside the trailing EOI
+    marker loses no data; those prefixes decode to the full image."""
+    full = J.decode_jpeg_bytes(stream)
+    eoi = stream.rfind(b"\xff\xd9")
+    for n in range(len(stream)):
+        if n >= eoi:
+            assert J.decode_jpeg_bytes(stream[:n]) == full
+            continue
+        with pytest.raises(ValueError) as err:
+            J.decode_jpeg_bytes(stream[:n])
+        cause = err.value.__cause__
+        assert cause is None or isinstance(cause, (IndexError, struct.error)), n
+
+
+def test_scan_lut_cache_is_bounded_fifo(monkeypatch):
+    """Distinct DHT tables beyond the bound evict the oldest entry; an
+    evicted table is rebuilt identically on its next use (re-fill), and
+    decoding keeps working through the churn."""
+    monkeypatch.setattr(J, "_SCAN_LUT_CACHE", {})
+    cap = J._SCAN_LUT_CACHE_MAX
+    bits = bytes([0] * 7 + [1] + [0] * 8)  # one 8-bit code, symbol v
+    key = lambda v: bits + b"\x00" + bytes([v])  # noqa: E731  (_scan_luts' key)
+    first = J._scan_luts(bits, bytes([0]))
+    for v in range(1, cap + 1):
+        J._scan_luts(bits, bytes([v]))
+    assert list(J._SCAN_LUT_CACHE) == [key(v) for v in range(1, cap + 1)]  # 0 evicted
+    assert J._scan_luts(bits, bytes([0])) == first  # re-fill evicts the next oldest
+    assert list(J._SCAN_LUT_CACHE) == [key(v) for v in range(2, cap + 1)] + [key(0)]
+    w, h, _, _ = J.decode_jpeg_bytes(J.make_jpeg(5, 8, 8))
+    assert (w, h) == (8, 8) and len(J._SCAN_LUT_CACHE) == cap
 
 
 def test_decode_jpeg_verb_matches_formula(spark):

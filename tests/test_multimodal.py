@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import pytest
 
+from airflow_crypto_etl_spark.operators import gif as gf
+from airflow_crypto_etl_spark.operators import jpeg as jp
 from airflow_crypto_etl_spark.operators import multimodal as mm
+from airflow_crypto_etl_spark.operators.layout import widen
 from airflow_crypto_etl_spark.sources.tables import load_table
 
 
@@ -320,3 +323,75 @@ def test_decode_avi_arrow_pandas_agreement(spark, sf_dir):
     arrow = {r["doc_id"]: tuple(r) for r in mm.decode_avi_sampled(payload, every=2).collect()}
     pandas = {r["doc_id"]: tuple(r) for r in mm.decode_avi_sampled_pandas(payload, every=2).collect()}
     assert arrow == pandas and len(arrow) == 24
+
+
+def _exchanges(plan):
+    """ShuffleExchangeExec nodes of a physical plan (JVM tree walk)."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+_ATTACH_VERBS = {
+    # verb, the generator it must match, whether it widens its id input
+    "ppm": (mm.attach_ppm_payload, lambda i: mm.make_ppm(i, 4 + i % 5, 3 + i % 4), False),
+    "png": (mm.attach_png_payload, lambda i: mm.make_png(i, 4 + i % 5, 3 + i % 4), False),
+    "wav": (mm.attach_wav_payload, lambda i: mm.make_wav(i, 50 + i % 20), False),
+    "avi": (
+        mm.attach_avi_payload,
+        lambda i: mm.make_avi(i, 2 + i % 4, 8 * (1 + i % 3), 8 * (1 + i % 2)),
+        True,
+    ),
+    "jpeg": (
+        jp.attach_jpeg_payload,
+        lambda i: jp.make_jpeg(i, 8 * (1 + i % 3), 8 * (1 + i % 2)),
+        True,
+    ),
+    "jpeg_color": (
+        jp.attach_jpeg_color_payload,
+        lambda i: jp.make_jpeg_color(
+            64 + 2 * ((3 * i) % 64),
+            128 + 17 * ((i % 5) - 2),
+            128 + 17 * ((i % 3) - 1),
+            8 * (1 + i % 2),
+            8,
+        ),
+        True,
+    ),
+    "gif": (gf.attach_gif_payload, lambda i: gf.make_gif(i, *gf.gif_geometry(i)), True),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ATTACH_VERBS))
+def test_attach_verb_rows_and_exchange(spark, name):
+    """Each synthetic-payload attach verb yields (id, payload) rows equal
+    to its generator called directly. The verbs with heavy kernels
+    downstream (jpeg, jpeg_color, gif, avi) put exactly one round-robin
+    exchange to defaultParallelism under the generator, and it moves
+    only the id column; the cheap ones (ppm, png, wav) add none. With
+    ``spread=False`` the widening helper returns its input as is."""
+    verb, make, widens = _ATTACH_VERBS[name]
+    ids = [0, 1, 7, 123]
+    docs = spark.createDataFrame([(i, f"t{i}") for i in ids], "doc_id long, text string")
+    assert widen(docs, spread=False) is docs
+    out = verb(docs)
+    assert out.schema.simpleString() == "struct<doc_id:bigint,payload:binary>"
+    got = {r["doc_id"]: bytes(r["payload"]) for r in out.collect()}
+    assert got == {i: make(i) for i in ids}
+
+    exchanges = _exchanges(out._jdf.queryExecution().sparkPlan())
+    if not widens:
+        assert exchanges == []
+        return
+    assert len(exchanges) == 1
+    (ex,) = exchanges
+    part = ex.outputPartitioning()
+    assert part.getClass().getSimpleName() == "RoundRobinPartitioning"
+    assert part.numPartitions() == spark.sparkContext.defaultParallelism
+    child_out = ex.child().output()
+    assert [child_out.apply(i).name() for i in range(child_out.size())] == ["doc_id"]

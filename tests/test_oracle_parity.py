@@ -288,54 +288,46 @@ def test_no_unconditional_corpus_repartition():
     relation must be caller-gated behind the `spread` discipline — at
     100 TB an unconditional round-robin repartition is a full extra pass
     of the corpus through the exchange for zero benefit (the scan
-    already yields thousands of partitions). Sanctioned sites: the two
-    `_spread` helpers (dedup.py, similarity.py — both behind an
-    `if not spread: return df` guard), compaction.py's small-file
-    compactor, whose entire JOB is choosing the output file count, and
-    multimodal.py's `fan_out`, which exchanges ONLY the id column of
-    the synthetic-payload attach verbs (payloads are generated and
-    consumed downstream of it and never cross a shuffle; production
-    media arrives pre-split via sources.media.read_media_dir, not
-    through attach_*)."""
+    already yields thousands of partitions). Sanctioned sites:
+    `layout.widen`, the one widening helper, behind its
+    `if not spread` guard; compaction.py's small-file compactor, whose
+    entire JOB is choosing the output file count; and the three
+    `*_index_compact` compactors, which hash-repartition INDEX rows
+    (cid/band/sig ids, never vectors or documents) — the call is the
+    operator, not overhead."""
+    import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "airflow_crypto_etl_spark"
-    sanctioned = {
-        ("operators/dedup.py", "def _spread"),
-        ("operators/similarity.py", "def _spread"),
-        ("sinks/compaction.py", None),
+    compactors = {
+        ("operators/dedup.py", "minhash_index_compact"),
+        ("operators/similarity.py", "ivf_index_compact"),
+        ("operators/similarity.py", "pq_index_compact"),
     }
     offenders = []
     for py in sorted(pkg.rglob("*.py")):
         rel = str(py.relative_to(pkg)).replace("\\", "/")
+        if rel == "sinks/compaction.py":
+            continue
         text = py.read_text()
         lines = text.splitlines()
+        # line -> the functions whose body spans it (outermost first)
+        enclosing: dict[int, list[ast.FunctionDef]] = {}
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.FunctionDef):
+                for ln in range(node.lineno, node.end_lineno + 1):
+                    enclosing.setdefault(ln, []).append(node)
         for i, line in enumerate(lines, 1):
             if ".repartition(" not in line or line.lstrip().startswith("#"):
                 continue
-            if rel == "sinks/compaction.py":
+            funcs = enclosing.get(i, [])
+            names = {f.name for f in funcs}
+            if any((rel, n) in compactors for n in names):
                 continue
-            # the call must sit inside a function named _spread with a
-            # `if not spread` guard above it
-            head = "\n".join(lines[max(0, i - 20) : i])
-            if "def _spread" in head and "if not spread" in head:
-                continue
-            # ivf_index_compact / minhash_index_compact are COMPACTORS
-            # (the compaction.py category): their entire job is
-            # choosing the re-layout — one hash repartition of INDEX
-            # rows (cid/band/sig ids, never vectors or documents) — so
-            # the call is the operator, not overhead
-            head40 = "\n".join(lines[max(0, i - 40) : i])
-            if (
-                "def ivf_index_compact" in head40
-                or "def minhash_index_compact" in head40
-                or "def pq_index_compact" in head40
-            ):
-                continue
-            # multimodal.fan_out exchanges only the id column of the
-            # synthetic-payload attach verbs (see docstring above)
-            if rel == "operators/multimodal.py" and "def fan_out" in head40:
-                continue
+            if rel == "operators/layout.py" and funcs and funcs[-1].name == "widen":
+                guard = lines[funcs[-1].lineno - 1 : i - 1]
+                if any(g.strip() == "if not spread:" for g in guard):
+                    continue
             offenders.append(f"{rel}:{i}: {line.strip()}")
     assert not offenders, (
         f"unconditional .repartition( outside the spread discipline: {offenders}"

@@ -728,6 +728,28 @@ def test_pq_index_build_codes_equal_append(spark, sf_dir):
         assert got == want and len(got) > 0
 
 
+def test_index_builders_quote_column_names(spark, sf_dir):
+    """The trained index builders splice caller-supplied column names
+    into SQL text: names that need quoting (a space, a hyphen) build
+    the same index as the default names."""
+    from airflow_crypto_etl_spark.operators.dedup import release_caches
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    odd = emb.select(F.col("vec_id").alias("vec id"), F.col("embedding").alias("emb-v"))
+    rows = lambda df: sorted(tuple(map(str, r)) for r in df.collect())  # noqa: E731
+    try:
+        for build in (
+            lambda e, **names: sim.pq_index_build(e, trained=True, **names),
+            lambda e, **names: sim.ivf_index_retrain(e, spread=False, **names),
+        ):
+            book, index = build(odd, id_col="vec id", vec_col="emb-v")
+            book_d, index_d = build(emb)
+            assert rows(book) == rows(book_d) and book.count() == 16
+            assert rows(index) == rows(index_d) and index.count() == emb.count()
+    finally:
+        release_caches()
+
+
 def test_pq_index_append_equals_rebuild_and_replay_noop(spark, sf_dir, tmp_path):
     """The growing-PQ-index contract (q_ann_pq_index_append's live
     twin): lookup against base + two appended batch_id partitions is
