@@ -5,17 +5,25 @@ Beyond reference parity (the reference has no text ops — SURVEY.md §2.9
 a 100 TB pretraining pipeline needs: token statistics, quality scoring,
 language ID, and content fingerprinting over the ``documents`` table.
 
-All operators are pure column expressions (split / filter / aggregate
-lambdas run JVM-side inside whole-stage codegen) — no Python UDFs in any
-hot path, so throughput is bounded by scan speed, not serde. Each is
-deterministic and engine-portable so the DuckDB oracle can replay it
-exactly (see functions.hashing for the portability rules).
+The operators are column expressions run JVM-side — no Python UDFs in
+any hot path, so throughput is bounded by scan speed, not serde. The
+measured exception is winnowing: its per-character gram/window math ran
+as interpreted higher-order-function lambdas (Spark's ``transform`` and
+``aggregate`` fall back from whole-stage codegen), so it is one numpy
+kernel in a ``mapInArrow`` pass instead. Each operator is deterministic
+and engine-portable so the DuckDB oracle can replay it exactly (see
+functions.hashing for the portability rules).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.hashing import char_hash
 
@@ -201,11 +209,81 @@ def tfidf_topk(df: DataFrame, k: int = 3, text_col: str = "text", id_col: str = 
 WINNOW_K = 8  # char-gram length
 WINNOW_W = 4  # window of consecutive gram hashes
 _WINNOW_MOD = 1 << 30  # CHAR_MOD — keeps sums far from int64 overflow
-# 31^(K-1) ... 31^0 — the explicit polynomial weights, so each gram
-# hash is ONE flat 8-term expression (no inner fold): equal to the
-# step-wise (acc*31 + c) % MOD hash by modular arithmetic, but ~8×
-# fewer lambda frames per gram in both engines.
+# 31^(K-1) ... 31^0 — the explicit polynomial weights of one gram hash:
+# equal to the step-wise (acc*31 + c) % MOD hash by modular arithmetic,
+# and exact in int64 before the final mod (0x10FFFF · Σ31^j ≈ 3.2e16).
+# The DuckDB oracles render the same weights as one flat SQL sum.
 _WINNOW_POW = [31 ** (WINNOW_K - 1 - j) for j in range(WINNOW_K)]
+
+
+def winnow_select(
+    texts: pa.Array, k: int = WINNOW_K, w: int = WINNOW_W
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The winnowing kernel over one Arrow string column; Spark-free, so
+    tests and microbenches call it directly.
+
+    For every text of at least ``k + w - 1`` code points: hash each
+    char k-gram, take each window of ``w`` consecutive gram hashes'
+    minimum (rightmost position on ties — the paper's robust-winnowing
+    rule) and keep the distinct selected positions. Null and shorter
+    texts have no complete window and select nothing.
+
+    The batch is one numpy pass: all kept texts are concatenated into
+    one code-point array, every gram hash and window minimum is computed
+    over it, and only the windows that lie inside one text are read.
+
+    Returns ``(rows, n_grams, doc, h)``: ``rows`` are the indices of the
+    kept texts, ``n_grams`` their gram counts, and each selected position
+    contributes one ``(doc, h)`` entry — ``rows[doc]`` is its text and
+    ``h`` its gram hash, in text order."""
+    strs = texts.to_pylist()
+    n = np.array([0 if t is None else len(t) for t in strs], dtype=np.int64)
+    rows = np.flatnonzero(n >= k + w - 1)
+    n = n[rows]
+    if not rows.size:
+        return rows, n, rows, n
+    # code points, as Spark's split(text, '') + ascii read them
+    c = np.frombuffer("".join(strs[i] for i in rows).encode("utf-32-le"), np.uint32)
+    c = c.astype(np.int64)
+    m = c.size - k + 1
+    g = sum(c[j : j + m] * p for j, p in enumerate(_WINNOW_POW)) % _WINNOW_MOD
+    # window minimum over g[p : p + w]: `<=` lets the rightmost tie win
+    m -= w - 1
+    best, pick = g[:m], np.zeros(m, dtype=np.int64)
+    for j in range(1, w):
+        take = g[j : j + m] <= best
+        best = np.where(take, g[j : j + m], best)
+        pick = np.where(take, j, pick)
+    pick += np.arange(m)
+    # the windows that lie inside one text: text i's start, then n_win[i] windows
+    start = np.cumsum(n) - n
+    n_win = n - (k + w - 2)
+    p = np.arange(n_win.sum()) + np.repeat(start - (np.cumsum(n_win) - n_win), n_win)
+    pos = np.unique(pick[p])
+    return rows, n - k + 1, np.searchsorted(start, pos, side="right") - 1, g[pos]
+
+
+def _winnow_map(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    w: int,
+    fields: list[T.StructField],
+    emit: Callable[[pa.Array, np.ndarray, np.ndarray, np.ndarray, np.ndarray], dict],
+) -> DataFrame:
+    """Run :func:`winnow_select` over ``df`` as one ``mapInArrow`` pass:
+    ``emit(ids, rows, n_grams, doc, h)`` turns one batch's selection into
+    output columns after the id field (name, type, nullability) copied
+    from ``df``. Zero shuffle: one task per scan split."""
+    src = df.select(id_col, text_col)
+    schema = T.StructType([src.schema.fields[0], *fields])
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in it:
+            yield pa.RecordBatch.from_pydict(emit(rb.column(0), *winnow_select(rb.column(1), k, w)))
+
+    return src.mapInArrow(batches, schema)
 
 
 def winnow_fingerprints(
@@ -222,73 +300,40 @@ def winnow_fingerprints(
     for any match of length ≥ k + w - 1, with density 2/(w+1) — the
     MOSS scheme for plagiarism/overlap detection at corpus scale.
 
-    Everything is a per-row codegen expression (char codes → gram
-    hashes → window minima → distinct), zero shuffle: at 100 TB the
-    fingerprint pass is a pure map over the corpus, and cross-doc
-    overlap search is then an equi-join on the 8-byte fingerprint
-    hashes, never on text. Docs shorter than k+w-1 chars have no
-    complete window and are filtered (they cannot produce a guaranteed
-    match anyway).
+    The per-character math is the numpy kernel :func:`winnow_select` in
+    one ``mapInArrow`` pass, not column expressions: as
+    ``transform``/``aggregate`` lambdas it ran interpreted, outside
+    whole-stage codegen, and q_winnowing ran ~20× slower at sf0.1. Zero
+    shuffle: at 100 TB the fingerprint pass is a pure map over the
+    corpus, and cross-doc overlap search is then an equi-join on the
+    8-byte fingerprint hashes, never on text. Docs shorter than k+w-1
+    chars have no complete window and are filtered (they cannot produce
+    a guaranteed match anyway).
 
     Output per doc: n_grams, n_selected (distinct fingerprints kept,
     ≈ 2/(w+1)·n_grams), fp_checksum (integer sum of the distinct
     selected hashes — order-free, an equality witness for the whole
     fingerprint set).
-
-    Expression-shape note: each window hashes its w member grams
-    INLINE from the materialized char-code column (a bounded w·k-term
-    expression), rather than indexing a precomputed gram-hash array
-    column. A gram-hash array referenced once inside the window lambda
-    would be re-inlined there by CollapseProject and then re-evaluated
-    per window element (no CSE inside higher-order lambdas — the
-    :func:`similarity._normed_base` rule), turning the O(n·w·k) sweep
-    into O(n²·w·k); the inline form re-hashes each gram at most w
-    times, a fixed 4× and loop-safe. The `_codes` column itself is
-    referenced k times per window element, which keeps its projection
-    from collapsing into the lambda.
     """
-    n = F.length(F.col(text_col))
-    codes = F.transform(F.split(F.col(text_col), ""), lambda ch: F.ascii(ch).cast("bigint"))
 
-    def gram_hash(i: Column) -> Column:  # i is 1-based gram start
-        expr = F.lit(0).cast("bigint")
-        for j, p in enumerate(_WINNOW_POW):
-            expr = expr + F.element_at(F.col("_codes"), i + j) * F.lit(p)
-        return expr % _WINNOW_MOD
+    def emit(ids, rows, n_grams, doc, h):
+        n_sel = np.bincount(doc, minlength=rows.size)
+        checksum = np.add.reduceat(h, np.cumsum(n_sel) - n_sel) if h.size else h
+        return {
+            id_col: ids.take(rows),
+            "n_grams": pa.array(n_grams, pa.int64()),
+            "n_selected": pa.array(n_sel, pa.int32()),
+            "fp_checksum": pa.array(checksum, pa.int64()),
+        }
 
-    staged = (
-        df.filter(n >= k + w - 1)
-        .select(
-            F.col(id_col),
-            (n - k + 1).cast("int").alias("_ng"),
-            codes.alias("_codes"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("_ng"),
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("_ng") - w + 1),
-                    lambda p: F.array_min(
-                        F.transform(
-                            F.sequence(p, p + w - 1),
-                            lambda j: F.struct(
-                                gram_hash(j).alias("h"),
-                                (-j).cast("bigint").alias("np"),
-                            ),
-                        )
-                    ),
-                )
-            ).alias("_picked"),
-        )
-    )
-    return staged.select(
-        F.col(id_col),
-        F.col("_ng").cast("bigint").alias("n_grams"),
-        F.size(F.col("_picked")).alias("n_selected"),
-        F.aggregate(
-            F.col("_picked"), F.lit(0).cast("bigint"), lambda acc, e: acc + e["h"]
-        ).alias("fp_checksum"),
+    return _winnow_map(
+        df, text_col, id_col, k, w,
+        [
+            T.StructField("n_grams", T.LongType()),
+            T.StructField("n_selected", T.IntegerType()),
+            T.StructField("fp_checksum", T.LongType()),
+        ],
+        emit,
     )
 
 
@@ -309,55 +354,28 @@ def winnow_pairs(
     candidate set.
 
     Scale shape: the fingerprint pass is the zero-shuffle
-    :func:`winnow_fingerprints` projection; pairing is an EQUI-join of
-    the (doc, hash) posting list with itself on the 8-byte hash —
-    never an all-pairs product. ``df_cap`` drops boilerplate hashes
-    shared by more than df_cap docs WHOLESALE before the join (the
-    lsh_near_pairs discipline): one viral fingerprint otherwise
-    contributes C(df, 2) pairs and owns the runtime at 100 TB. The cap
-    is exercised by the registered query, not just available. The
-    posting list feeds THREE consumers (the df count and both join
+    :func:`winnow_select` map of :func:`winnow_fingerprints`; pairing is
+    an EQUI-join of the (doc, hash) posting list with itself on the
+    8-byte hash — never an all-pairs product. ``df_cap`` drops
+    boilerplate hashes shared by more than df_cap docs WHOLESALE before
+    the join (the lsh_near_pairs discipline): one viral fingerprint
+    otherwise contributes C(df, 2) pairs and owns the runtime at 100 TB.
+    The cap is exercised by the registered query, not just available.
+    The posting list feeds THREE consumers (the df count and both join
     sides), so it is cached via :func:`dedup.register_cache` — without
     it the corpus-wide fingerprint projection re-runs three times."""
-    n = F.length(F.col(text_col))
-    codes = F.transform(F.split(F.col(text_col), ""), lambda ch: F.ascii(ch).cast("bigint"))
 
-    def gram_hash(i: Column) -> Column:
-        expr = F.lit(0).cast("bigint")
-        for j, p in enumerate(_WINNOW_POW):
-            expr = expr + F.element_at(F.col("_codes"), i + j) * F.lit(p)
-        return expr % _WINNOW_MOD
+    def emit(ids, rows, n_grams, doc, h):
+        # per-doc DISTINCT hashes computed inside the batch (a hash
+        # selected at several positions collapses here), so the posting
+        # list needs no global distinct shuffle
+        key = np.unique(doc * _WINNOW_MOD + h)
+        return {
+            id_col: ids.take(rows[key // _WINNOW_MOD]),
+            "h": pa.array(key % _WINNOW_MOD, pa.int64()),
+        }
 
-    picked = (
-        df.filter(n >= k + w - 1)
-        .select(
-            F.col(id_col),
-            (n - k + 1).cast("int").alias("_ng"),
-            codes.alias("_codes"),
-        )
-        .select(
-            F.col(id_col),
-            # per-doc DISTINCT hashes computed inside the row (a hash
-            # selected at several positions collapses here), so the
-            # exploded posting list needs no global distinct shuffle
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.col("_ng") - w + 1),
-                        lambda p: F.array_min(
-                            F.transform(
-                                F.sequence(p, p + w - 1),
-                                lambda j: F.struct(
-                                    gram_hash(j).alias("h"),
-                                    (-j).cast("bigint").alias("np"),
-                                ),
-                            )
-                        )["h"],
-                    )
-                )
-            ).alias("h"),
-        )
-    )
+    picked = _winnow_map(df, text_col, id_col, k, w, [T.StructField("h", T.LongType())], emit)
     from .dedup import register_cache
 
     picked = register_cache(picked)

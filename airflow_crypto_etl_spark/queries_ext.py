@@ -516,7 +516,7 @@ def q_dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild for the dedup side: compaction is pure re-layout, and the
     lookup's two probe joins get back the bounded file-set-per-bucket
     read pattern that daily small-file appends erode at 100 TB."""
-    from .queries_selection import _ivf_index_root
+    from .queries_selection import _in_threads, _ivf_index_root
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     base = docs.filter(F.col("doc_id") % 10 != 7)
@@ -547,10 +547,7 @@ def q_dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             str(root / "bands" / f"batch_id={b}")
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(persist, enumerate(sigs)))
+    _in_threads(spark, persist, list(enumerate(sigs)), 3)
     sig_c, bands_c = dd.minhash_index_compact(
         spark.read.parquet(str(root / "sig")), spark.read.parquet(str(root / "bands"))
     )

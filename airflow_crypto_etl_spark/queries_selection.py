@@ -758,20 +758,34 @@ def _ivf_index_root(sf_dir: str, kind: str = "ivf_index") -> "pathlib.Path":
     return root
 
 
+def _in_threads(spark: SparkSession, fn, items: list, workers: int) -> None:
+    """``fn(item)`` for every item, from a pool of ``workers`` threads.
+    A plain pool thread starts with no job group, description or tags,
+    so each call is wrapped in ``inheritable_thread_target`` when it is
+    submitted: its jobs carry the caller's, and each thread gets its own
+    copy of the caller's local properties."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), it) for it in items]
+        for f in futures:
+            f.result()
+
+
 def _write_pair(root: "pathlib.Path", named_dfs: list) -> None:
     """Persist the two tables of an index pair CONCURRENTLY (guide
     §2.6): they derive from independent plans (the big table is built
     from the in-memory book, not the persisted one), each write owns
     its own directory, and Spark back-fills the small write's idle
     executors with the big write's tasks."""
-    from concurrent.futures import ThreadPoolExecutor
 
     def one(item) -> None:
         name, df = item
         df.write.mode("overwrite").parquet(str(root / name))
 
-    with ThreadPoolExecutor(max_workers=len(named_dfs)) as pool:
-        list(pool.map(one, named_dfs))
+    _in_threads(named_dfs[0][1].sparkSession, one, named_dfs, len(named_dfs))
 
 
 def _write_batches(root: "pathlib.Path", name: str, batches: list) -> None:
@@ -785,14 +799,12 @@ def _write_batches(root: "pathlib.Path", name: str, batches: list) -> None:
     replay idempotence — re-writing batch b overwrites exactly
     ``root/name/batch_id=b`` — while giving each concurrent job its own
     commit scope (no shared staging state between jobs)."""
-    from concurrent.futures import ThreadPoolExecutor
 
     def one(item) -> None:
         b, rows = item
         rows.write.mode("overwrite").parquet(str(root / name / f"batch_id={b}"))
 
-    with ThreadPoolExecutor(max_workers=min(3, len(batches))) as pool:
-        list(pool.map(one, enumerate(batches)))
+    _in_threads(batches[0].sparkSession, one, list(enumerate(batches)), min(3, len(batches)))
 
 
 def q_ann_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:

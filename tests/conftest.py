@@ -71,16 +71,21 @@ def count_jobs(sc):
     """Count the Spark jobs started in this thread inside the block: they
     run under a fresh job group, looked up afterwards through
     ``statusTracker()`` (which works with the UI off). ``n`` of the
-    yielded object is set when the block exits."""
+    yielded object is set when the block exits, and so is ``ungrouped``:
+    the jobs the block started outside any group, e.g. from a thread
+    that did not inherit the caller's job group."""
     group = f"count-jobs-{next(_job_groups)}"
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
     sc.setJobGroup(group, group)
-    got = SimpleNamespace(n=0)
+    got = SimpleNamespace(n=0, ungrouped=0)
     try:
         yield got
     finally:
         # job-start events reach the status store through the listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         got.n = len(sc.statusTracker().getJobIdsForGroup(group))
+        got.ungrouped = len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
         sc._jsc.clearJobGroup()
 
 

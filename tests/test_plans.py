@@ -89,3 +89,16 @@ def test_embed_neardup_is_bucket_equijoin(spark, sf_dir):
     p = plan_of(spark, qx.q_embed_neardup(spark, sf_dir))
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p, p
     assert "bucket" in p, p
+
+
+def test_winnowing_is_one_arrow_map_without_shuffle(spark, sf_dir):
+    # the winnowing kernel is a pure map over the scan: one Arrow batch
+    # pass, no exchange, no row-at-a-time Python UDF
+    import re
+
+    from airflow_crypto_etl_spark.queries_selection import q_winnowing
+
+    p = plan_of(spark, q_winnowing(spark, sf_dir))
+    assert len(re.findall(r"\(\d+\) MapInArrow", p)) == 1, p
+    assert n_exchanges(p) == 0 and "Exchange" not in p, p
+    assert "BatchEvalPython" not in p, p

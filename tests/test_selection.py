@@ -10,10 +10,12 @@ extension (SURVEY.md LLM-prep battery)."""
 from __future__ import annotations
 
 import math
+import random
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from airflow_crypto_etl_spark.operators import llm_prep as lp
 from airflow_crypto_etl_spark.operators import similarity as sim
@@ -51,7 +53,11 @@ def _emb_rows():
 # ---------------------------------------------------------------------------
 
 
-def _py_winnow(text: str, k: int = 8, w: int = 4):
+def _py_winnow_picked(text: str | None, k: int = 8, w: int = 4):
+    """(n_grams, {(hash, -position)} selected), or None for a text with
+    no complete window."""
+    if text is None:
+        return None
     codes = [ord(c) for c in text]
     n = len(codes)
     if n < k + w - 1:
@@ -67,7 +73,69 @@ def _py_winnow(text: str, k: int = 8, w: int = 4):
         # min hash, rightmost on ties == lexicographic min of (h, -pos)
         best = min((gh[p + j], -(p + j + 1)) for j in range(w))
         picked.add(best)
-    return len(gh), len(picked), sum(h for h, _ in picked)
+    return len(gh), picked
+
+
+def _py_winnow(text: str | None, k: int = 8, w: int = 4):
+    got = _py_winnow_picked(text, k, w)
+    if got is None:
+        return None
+    n_grams, picked = got
+    return n_grams, len(picked), sum(h for h, _ in picked)
+
+
+def _py_winnow_pairs(texts: dict, min_shared: int, df_cap: int | None) -> dict:
+    """{(doc_a, doc_b): n_shared} over the distinct selected hashes."""
+    post = {}
+    for i, t in texts.items():
+        got = _py_winnow_picked(t)
+        if got is not None:
+            post[i] = {h for h, _ in got[1]}
+    n_docs = {}
+    for hs in post.values():
+        for h in hs:
+            n_docs[h] = n_docs.get(h, 0) + 1
+    if df_cap is not None:
+        post = {i: {h for h in hs if n_docs[h] <= df_cap} for i, hs in post.items()}
+    ids = sorted(post)
+    pairs = {}
+    for x, a in enumerate(ids):
+        for b in ids[x + 1 :]:
+            n = len(post[a] & post[b])
+            if n >= min_shared:
+                pairs[(a, b)] = n
+    return pairs
+
+
+def _winnow_battery(seed: int = 20031) -> list:
+    """Seeded texts at the kernel's edges: null, empty, one code point
+    short of a window (k+w-2 = 10), exactly one window (11), long (600),
+    NUL, CRLF, combining marks, non-BMP and U+10FFFF — plus texts that
+    share a run, so the pairs side has matches to find."""
+    rng = random.Random(seed)
+    alphabet = ["a", "b", " ", "\x00", "\r\n", "e\u0301", "\u0308", "\u4e2d",
+                "\U0001f600", "\U0010ffff", "\t", "z"]
+    texts = [None, "", "x" * 10, "x" * 11, "\U0010ffff" * 11, "\x00" * 12, "y" * 600]
+    for n in [0, 1, 10, 11, 12, 40, 600] * 12:
+        texts.append("".join(rng.choice(alphabet) for _ in range(n))[:n])
+    run = "the quick brown fox jumps over the lazy dog, twice \U0001f600 over"
+    for _ in range(30):
+        texts.append(
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 6)))
+            + run[: rng.randint(11, len(run))]
+            + "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 30)))
+        )
+    return texts
+
+
+_BATTERY_IDS = [("doc_id", T.LongType()), ("doc id", T.IntegerType())]
+
+
+def _battery_df(spark, id_name, id_type):
+    schema = T.StructType(
+        [T.StructField(id_name, id_type), T.StructField("text", T.StringType())]
+    )
+    return spark.createDataFrame(list(enumerate(_winnow_battery())), schema)
 
 
 def test_winnow_matches_python_reference(spark, sf_dir):
@@ -84,6 +152,16 @@ def test_winnow_matches_python_reference(spark, sf_dir):
         assert out[doc_id] == ref, f"doc {doc_id}"
         checked += 1
     assert checked >= 400
+
+    # edge battery, with the id column's name and type carried through
+    texts = _winnow_battery()
+    for id_name, id_type in _BATTERY_IDS:
+        got = tx.winnow_fingerprints(_battery_df(spark, id_name, id_type), id_col=id_name)
+        assert got.schema.fields[0] == T.StructField(id_name, id_type)
+        out = {r[0]: tuple(r[1:]) for r in got.collect()}
+        ref = {i: _py_winnow(t) for i, t in enumerate(texts)}
+        assert out == {i: v for i, v in ref.items() if v is not None}
+        assert len(out) >= 80
 
 
 def test_winnow_shared_substring_guarantee(spark):
@@ -364,6 +442,21 @@ def test_ivfpq_recall_bounds(spark, sf_dir):
         assert 0.0 <= r["recall"] <= 1.0
 
 
+
+@pytest.mark.parametrize(
+    "name", ["q_ann_pq_index_lookup", "q_ann_index_append", "q_dedup_index_compact"]
+)
+def test_thread_pool_jobs_keep_the_job_group(spark, sf_dir, spark_jobs, name):
+    """The index writes run from a thread pool (_write_pair,
+    _write_batches, the compact query's persist pool); their jobs must
+    carry the caller's job group like every other job of the query."""
+    import __spark_entry__ as entrymod
+
+    with spark_jobs() as jobs:
+        entrymod.queries()[name](spark, sf_dir).collect()
+    assert jobs.n >= 3
+    assert jobs.ungrouped == 0, f"{jobs.ungrouped} of the query's jobs left its group"
+
 # ---------------------------------------------------------------------------
 # Winnow pairs — overlap detection + df-cap behavior
 # ---------------------------------------------------------------------------
@@ -401,6 +494,19 @@ def test_winnow_pairs_df_cap_drops_boilerplate(spark):
     uncapped = winnow_pairs(df, min_shared=3, df_cap=None).count()
     assert capped == 0
     assert uncapped == 25 * 24 // 2
+
+
+@pytest.mark.parametrize("min_shared,df_cap", [(1, None), (3, 20), (1, 4)])
+def test_winnow_pairs_matches_python_reference(spark, min_shared, df_cap):
+    texts = dict(enumerate(_winnow_battery()))
+    ref = _py_winnow_pairs(texts, min_shared, df_cap)
+    assert ref
+    for id_name, id_type in _BATTERY_IDS:
+        got = tx.winnow_pairs(
+            _battery_df(spark, id_name, id_type), min_shared, df_cap, id_col=id_name
+        )
+        assert [f.dataType for f in got.schema.fields[:2]] == [id_type, id_type]
+        assert {(r["doc_a"], r["doc_b"]): r["n_shared"] for r in got.collect()} == ref
 
 
 # ---------------------------------------------------------------------------
