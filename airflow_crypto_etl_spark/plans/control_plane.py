@@ -26,7 +26,7 @@ is present.
 from __future__ import annotations
 
 import os
-from datetime import datetime, time, timedelta, timezone
+from datetime import date, datetime, time, timedelta, timezone
 
 from pyspark.sql import functions as F
 
@@ -141,6 +141,18 @@ def load_dim(ctx: dict) -> None:
     )
 
 
+def _ds(ctx: dict) -> str:
+    """``ctx["ds"]``, checked to be an ISO date (``YYYY-MM-DD``) before
+    it is spliced into SQL text."""
+    ds = ctx["ds"]
+    try:
+        if date.fromisoformat(ds).isoformat() == ds:
+            return ds
+    except (TypeError, ValueError):
+        pass
+    raise checks.CheckFailure(f"ds is not an ISO date: {ds!r}")
+
+
 def load_fact(ctx: dict) -> None:
     """Stage 7 — K6: fact append (one batch of price observations per
     ds; idempotency guard = delete-this-ds-first, the reference's
@@ -148,7 +160,7 @@ def load_fact(ctx: dict) -> None:
     execute_jdbc_statement(
         ctx["spark"],
         ctx["warehouse_url"],
-        f"DELETE FROM fact_price WHERE \"dt\" = '{ctx['ds']}'",
+        f"DELETE FROM fact_price WHERE \"dt\" = '{_ds(ctx)}'",
     )
     fact = _silver(ctx).select(
         "coin_id", F.lit(ctx["ds"]).alias("dt"), "price_usd", "market_cap"
@@ -229,7 +241,7 @@ def validate_gold(ctx: dict) -> None:
     back = read_jdbc(
         ctx["spark"],
         url=ctx["warehouse_url"],
-        query=f"SELECT * FROM gold_coins_daily WHERE \"dt\" = '{ctx['ds']}'",
+        query=f"SELECT * FROM gold_coins_daily WHERE \"dt\" = '{_ds(ctx)}'",
         driver=DERBY_DRIVER,
     )
     checks.reconcile(back, _gold(ctx))

@@ -65,6 +65,32 @@ def inflate(df: DataFrame, key_cols: list[str], n: int) -> DataFrame:
     return out
 
 
+def time_pair(results: dict, name: str, fn, small, big, *, warm: bool = True,
+              release: bool = False) -> tuple[int, int]:
+    """Time ``fn(small)`` then ``fn(big)``, each built and counted inside
+    its timing (``fn`` returns a DataFrame, or a count it took itself),
+    after one untimed warm-up on ``small`` unless ``warm`` is False.
+    Records ``{t1, tN, ratio}`` as ``results[name]`` and returns the two
+    counts. ``release`` frees the registered caches after each call,
+    untimed."""
+
+    def run(arg) -> tuple[int, float]:
+        t0 = time.perf_counter()
+        out = fn(arg)
+        n = out if isinstance(out, int) else out.count()
+        elapsed = time.perf_counter() - t0
+        if release:
+            dd.release_caches()
+        return n, elapsed
+
+    if warm:
+        run(small)
+    n1, t1 = run(small)
+    nn, tn = run(big)
+    results[name] = {"t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)}
+    return n1, nn
+
+
 def _bm25_score(d: DataFrame) -> DataFrame:
     """The scoring core of queries_experiments.q_bm25 (tokenize →
     3-term tf → broadcast df + 1-row corpus stats → per-doc sum)."""
@@ -341,41 +367,16 @@ def main() -> None:
     ev_cases["bootstrap_reps"] = bootstrap_case
 
     results = {}
-    for name, fn in cases.items():
-        if not want(name):
-            continue
-        small = li
-        big = inflate(li, ["l_orderkey"], INFLATE)
-        fn(small).count()  # warm
-        t0 = time.perf_counter(); fn(small).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); fn(big).count(); tn = time.perf_counter() - t0
-        results[name] = {"t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)}
-    for name, fn in doc_cases.items():
-        if not want(name):
-            continue
-        big = inflate(docs, ["doc_id"], INFLATE)
-        fn(docs).count(); dd.release_caches()
-        t0 = time.perf_counter(); fn(docs).count(); t1 = time.perf_counter() - t0
-        dd.release_caches()
-        t0 = time.perf_counter(); fn(big).count(); tn = time.perf_counter() - t0
-        dd.release_caches()
-        results[name] = {"t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)}
-    for name, fn in or_cases.items():
-        if not want(name):
-            continue
-        big = inflate(orders, ["o_orderkey"], INFLATE)
-        fn(orders).count()
-        t0 = time.perf_counter(); fn(orders).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); fn(big).count(); tn = time.perf_counter() - t0
-        results[name] = {"t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)}
-    for name, fn in ev_cases.items():
-        if not want(name):
-            continue
-        big = inflate(ev, ["user_id", "event_id"], INFLATE)
-        fn(ev).count()
-        t0 = time.perf_counter(); fn(ev).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); fn(big).count(); tn = time.perf_counter() - t0
-        results[name] = {"t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)}
+    big_ev = inflate(ev, ["user_id", "event_id"], INFLATE)
+    for group, small, big, release in (
+        (cases, li, inflate(li, ["l_orderkey"], INFLATE), False),
+        (doc_cases, docs, inflate(docs, ["doc_id"], INFLATE), True),
+        (or_cases, orders, inflate(orders, ["o_orderkey"], INFLATE), False),
+        (ev_cases, ev, big_ev, False),
+    ):
+        for name, fn in group.items():
+            if want(name):
+                time_pair(results, name, fn, small, big, release=release)
 
     # PageRank (r5): edges inflate ~N× (shifted user ids → disjoint
     # subgraphs); per iteration one edge-scan join + one dst-keyed
@@ -389,13 +390,7 @@ def main() -> None:
         return gr.pagerank(edges, nodes, iters=2)
 
     if want("pagerank"):
-        big_ev = inflate(ev, ["user_id", "event_id"], INFLATE)
-        pagerank_case(ev).count()  # warm
-        t0 = time.perf_counter(); pagerank_case(ev).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); pagerank_case(big_ev).count(); tn = time.perf_counter() - t0
-        results["pagerank"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "pagerank", pagerank_case, ev, big_ev)
 
     # Label propagation (r5-late): same shuffle budget per round as a
     # PageRank iteration (edge-label equi-join + (node,label) partial
@@ -408,12 +403,7 @@ def main() -> None:
         )
 
     if want("label_prop"):
-        label_prop_case(ev).count()  # warm
-        t0 = time.perf_counter(); label_prop_case(ev).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); label_prop_case(big_ev).count(); tn = time.perf_counter() - t0
-        results["label_prop"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "label_prop", label_prop_case, ev, big_ev)
 
     # Triangle counting (r5): copy-inflation shifts user ids, so the
     # inflated graph is N disjoint copies — wedge joins stay bounded by
@@ -422,13 +412,7 @@ def main() -> None:
         return gr.triangle_count(gr.transition_edges(d))
 
     if want("triangles"):
-        big_ev2 = inflate(ev, ["user_id", "event_id"], INFLATE)
-        triangles_case(ev).count()  # warm
-        t0 = time.perf_counter(); triangles_case(ev).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); triangles_case(big_ev2).count(); tn = time.perf_counter() - t0
-        results["triangles"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "triangles", triangles_case, ev, big_ev)
 
     # Bloom build+probe (r5): both sides linear scans + a bounded-size
     # bit_or partial agg; probe joins a broadcast ≤2048-row word table
@@ -441,13 +425,7 @@ def main() -> None:
         return jn.bloom_probe(d.select(F.col("o_orderkey").alias("k")), "k", bloom)
 
     if want("bloom_probe"):
-        big_or = inflate(orders, ["o_orderkey"], INFLATE)
-        bloom_case(orders).count()  # warm
-        t0 = time.perf_counter(); bloom_case(orders).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); bloom_case(big_or).count(); tn = time.perf_counter() - t0
-        results["bloom_probe"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "bloom_probe", bloom_case, orders, inflate(orders, ["o_orderkey"], INFLATE))
 
     # Lloyd k-means (r5): per iteration one assignment scan (centroid
     # literals ride the closure) + one k·dim partial-agg shuffle whose
@@ -456,14 +434,9 @@ def main() -> None:
     # copy inflation: copies are true duplicates, so its OUTPUT is
     # quadratic in copies — same reasoning as minhash_signatures above.)
     emb = load_table(spark, SF_DIR, "embeddings")
+    big_emb = inflate(emb, ["vec_id"], INFLATE)
     if want("kmeans_assign"):
-        big_emb = inflate(emb, ["vec_id"], INFLATE)
-        sim.kmeans_assign(emb, k=8, iters=1).count()  # warm
-        t0 = time.perf_counter(); sim.kmeans_assign(emb, k=8, iters=1).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); sim.kmeans_assign(big_emb, k=8, iters=1).count(); tn = time.perf_counter() - t0
-        results["kmeans_assign"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "kmeans_assign", lambda e: sim.kmeans_assign(e, k=8, iters=1), emb, big_emb)
 
     # PQ/ADC search (r9): the CORPUS inflates N× while the codebook
     # (16 original centroids) and the 8 query vectors stay fixed —
@@ -472,16 +445,10 @@ def main() -> None:
     # ~N; a blow-up would mean the corpus started shuffling or the LUT
     # stopped broadcasting. Shifted-id copies keep vec_id<16 /
     # ANN_QUERY_IDS pointing at the ORIGINAL rows only.
-    if want("pq_search"):
-        from airflow_crypto_etl_spark.queries_ext import ANN_QUERY_IDS
+    from airflow_crypto_etl_spark.queries_ext import ANN_QUERY_IDS
 
-        big_emb_pq = inflate(emb, ["vec_id"], INFLATE)
-        sim.pq_topk(emb, ANN_QUERY_IDS, k=10).count()  # warm
-        t0 = time.perf_counter(); sim.pq_topk(emb, ANN_QUERY_IDS, k=10).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); sim.pq_topk(big_emb_pq, ANN_QUERY_IDS, k=10).count(); tn = time.perf_counter() - t0
-        results["pq_search"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+    if want("pq_search"):
+        time_pair(results, "pq_search", lambda e: sim.pq_topk(e, ANN_QUERY_IDS, k=10), emb, big_emb)
 
     # IVFADC search (r9): corpus N×, fixed coarse/residual codebooks
     # and queries — coarse-assign + residual-encode are map-only, the
@@ -489,15 +456,7 @@ def main() -> None:
     # (query, probed-list, LUT) table, so the ratio must stay ~N (each
     # query still touches only its n_probe lists, which deepen N×).
     if want("ivfpq_search"):
-        from airflow_crypto_etl_spark.queries_ext import ANN_QUERY_IDS as _IDS9
-
-        big_emb_ip = inflate(emb, ["vec_id"], INFLATE)
-        sim.ivfpq_topk(emb, _IDS9, k=10).count()  # warm
-        t0 = time.perf_counter(); sim.ivfpq_topk(emb, _IDS9, k=10).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); sim.ivfpq_topk(big_emb_ip, _IDS9, k=10).count(); tn = time.perf_counter() - t0
-        results["ivfpq_search"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "ivfpq_search", lambda e: sim.ivfpq_topk(e, ANN_QUERY_IDS, k=10), emb, big_emb)
 
     # IVF batch lookup (r9): corpus and index fixed at SF, the ingest
     # BATCH inflates N× (vec_id % 40 → % 10) — the production scale
@@ -511,13 +470,8 @@ def main() -> None:
                 (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
             )
 
-        small_b, big_b = _batch_of(40), _batch_of(max(40 // INFLATE, 1))
-        sim.ivf_batch_lookup(emb, small_b, k=10, spread=False).count()  # warm
-        t0 = time.perf_counter(); sim.ivf_batch_lookup(emb, small_b, k=10, spread=False).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); sim.ivf_batch_lookup(emb, big_b, k=10, spread=False).count(); tn = time.perf_counter() - t0
-        results["ivf_batch"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "ivf_batch", lambda b: sim.ivf_batch_lookup(emb, b, k=10, spread=False),
+                  _batch_of(40), _batch_of(max(40 // INFLATE, 1)))
 
     # IVF batch lookup under a COLLAPSED quantizer list (r9): one list
     # holds n_hot near-identical vectors (n_hot ≫ cap), the batch is 30
@@ -561,11 +515,7 @@ def main() -> None:
         assert all(
             r["neighbor_id"] not in hot_ids for r in out_small.collect()
         ), "list_cap must wholesale-drop the collapsed list"
-        t0 = time.perf_counter(); _hot_case(n_small).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); _hot_case(n_small * INFLATE).count(); tn = time.perf_counter() - t0
-        results["ivf_batch_hotlist"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "ivf_batch_hotlist", _hot_case, n_small, n_small * INFLATE, warm=False)
 
     # Persisted-index lookup (r10, the probe direction r9's verdict
     # asked for): the CORPUS inflates N×, the ingest batch is FIXED,
@@ -606,15 +556,9 @@ def main() -> None:
                 k=10, spread=False,
             )
 
-        big_corpus = inflate(emb, ["vec_id"], INFLATE)
-        small_q = _lookup_against(emb, "s")        # build untimed
-        big_q = _lookup_against(big_corpus, "b")   # build untimed
-        small_q.count()  # warm
-        t0 = time.perf_counter(); small_q.count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); big_q.count(); tn = time.perf_counter() - t0
-        results["ivf_index_corpus"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        small_q = _lookup_against(emb, "s")      # build untimed
+        big_q = _lookup_against(big_emb, "b")    # build untimed
+        time_pair(results, "ivf_index_corpus", lambda q: q, small_q, big_q)
         shutil.rmtree(tmp_ix, ignore_errors=True)
 
     # Persisted PQ index (r11): corpus ×N, batch FIXED, index
@@ -648,15 +592,9 @@ def main() -> None:
                 k=10,
             )
 
-        big_corpus_pq = inflate(emb, ["vec_id"], INFLATE)
-        small_pq = _pq_lookup_against(emb, "s")          # build untimed
-        big_pq = _pq_lookup_against(big_corpus_pq, "b")  # build untimed
-        small_pq.count()  # warm
-        t0 = time.perf_counter(); small_pq.count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); big_pq.count(); tn = time.perf_counter() - t0
-        results["pq_index_corpus"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        small_pq = _pq_lookup_against(emb, "s")      # build untimed
+        big_pq = _pq_lookup_against(big_emb, "b")    # build untimed
+        time_pair(results, "pq_index_corpus", lambda q: q, small_pq, big_pq)
         shutil.rmtree(tmp_pq, ignore_errors=True)
 
     # Index APPEND (r11): corpus ×N, batch FIXED, quantizer geometry
@@ -670,12 +608,11 @@ def main() -> None:
         import tempfile
 
         tmp_ap = tempfile.mkdtemp(prefix="ivf_ap_probe_")
-        big_corpus_ap = inflate(emb, ["vec_id"], INFLATE)
         # persist the quantizers UNTIMED (a deployment reads the tiny
         # centroid parquet, never re-derives it from the corpus — a
         # lazily-derived centroid slice would smuggle a corpus scan
         # into the timed append)
-        for tag, corp in (("s", emb), ("b", big_corpus_ap)):
+        for tag, corp in (("s", emb), ("b", big_emb)):
             cents, _ = sim.ivf_index_build(corp, n_centroids=16, spread=False)
             cents.write.mode("overwrite").parquet(f"{tmp_ap}/{tag}")
         sp_ap = emb.sparkSession
@@ -688,12 +625,7 @@ def main() -> None:
         ap_big = sim.ivf_index_append(
             fixed_batch_ap, sp_ap.read.parquet(f"{tmp_ap}/b"), spread=False
         )
-        ap_small.count()  # warm
-        t0 = time.perf_counter(); ap_small.count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); ap_big.count(); tn = time.perf_counter() - t0
-        results["ivf_append_corpus"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "ivf_append_corpus", lambda q: q, ap_small, ap_big)
         shutil.rmtree(tmp_ap, ignore_errors=True)
 
     # Index COMPACT (r11): grown assign table ×N — compaction is one
@@ -706,9 +638,8 @@ def main() -> None:
         import tempfile
 
         tmp_cp = tempfile.mkdtemp(prefix="ivf_cp_probe_")
-        big_corpus_cp = inflate(emb, ["vec_id"], INFLATE)
         sp_cp = emb.sparkSession
-        for tag, corp in (("s", emb), ("b", big_corpus_cp)):
+        for tag, corp in (("s", emb), ("b", big_emb)):
             cents, assign = sim.ivf_index_build(corp, n_centroids=16, spread=False)
             # persist the grown table UNTIMED (compaction's input is the
             # stored index, not a derivation from the corpus)
@@ -717,12 +648,7 @@ def main() -> None:
             ).parquet(f"{tmp_cp}/{tag}")
         cp_small = sim.ivf_index_compact(sp_cp.read.parquet(f"{tmp_cp}/s"))
         cp_big = sim.ivf_index_compact(sp_cp.read.parquet(f"{tmp_cp}/b"))
-        cp_small.count()  # warm
-        t0 = time.perf_counter(); cp_small.count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); cp_big.count(); tn = time.perf_counter() - t0
-        results["ivf_compact_corpus"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "ivf_compact_corpus", lambda q: q, cp_small, cp_big)
         shutil.rmtree(tmp_cp, ignore_errors=True)
 
     # Index RETRAIN (r11): corpus ×N — retraining is CORPUS-SCALE by
@@ -733,18 +659,8 @@ def main() -> None:
     # linear growth would mean the trainer started shuffling vectors
     # or the bounded dim·n_centroids driver collect grew with N.
     if want("ivf_retrain_corpus"):
-        big_corpus_rt = inflate(emb, ["vec_id"], INFLATE)
-
-        def _retrain_count(corp: DataFrame) -> int:
-            _, assign = sim.ivf_index_retrain(corp, n_centroids=16, spread=False)
-            return assign.count()
-
-        _retrain_count(emb)  # warm
-        t0 = time.perf_counter(); _retrain_count(emb); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); _retrain_count(big_corpus_rt); tn = time.perf_counter() - t0
-        results["ivf_retrain_corpus"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "ivf_retrain_corpus",
+                  lambda e: sim.ivf_index_retrain(e, n_centroids=16, spread=False)[1], emb, big_emb)
 
     # PQ index COMPACT (r11): grown codes table ×N — one hash shuffle
     # + within-partition sort of the (id, codes) rows (n_sub·8-byte
@@ -754,21 +670,15 @@ def main() -> None:
         import tempfile
 
         tmp_pc = tempfile.mkdtemp(prefix="pq_cp_probe_")
-        big_emb_pc = inflate(emb, ["vec_id"], INFLATE)
         sp_pc = emb.sparkSession
-        for tag, corp in (("s", emb), ("b", big_emb_pc)):
+        for tag, corp in (("s", emb), ("b", big_emb)):
             _, codes = sim.pq_index_build(corp, trained=False)
             codes.withColumn("batch_id", F.lit(0)).write.mode("overwrite").partitionBy(
                 "batch_id"
             ).parquet(f"{tmp_pc}/{tag}")
         pc_small = sim.pq_index_compact(sp_pc.read.parquet(f"{tmp_pc}/s"))
         pc_big = sim.pq_index_compact(sp_pc.read.parquet(f"{tmp_pc}/b"))
-        pc_small.count()  # warm
-        t0 = time.perf_counter(); pc_small.count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); pc_big.count(); tn = time.perf_counter() - t0
-        results["pq_compact_corpus"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "pq_compact_corpus", lambda q: q, pc_small, pc_big)
         shutil.rmtree(tmp_pc, ignore_errors=True)
 
     # MinHash index COMPACT (r11): grown (sig, bands) tables ×N —
@@ -800,30 +710,16 @@ def main() -> None:
             )
             return sig_c.count() + bands_c.count()
 
-        _compact_count("s")  # warm
-        t0 = time.perf_counter(); _compact_count("s"); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); _compact_count("b"); tn = time.perf_counter() - t0
-        results["minhash_compact_corpus"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "minhash_compact_corpus", _compact_count, "s", "b")
 
         # Index STATS (r11): the health read over the same grown bands
         # tables ×N — one partial-agg count into a ≤ buckets relation
         # plus constant-size aggregates, LINEAR bound. Growth past
         # linear would mean the hot-bucket pass stopped being a
         # partial agg (e.g. a global sort crept in).
-        def _stats_count(tag: str) -> int:
-            return dd.minhash_index_stats(
-                sp_mc.read.parquet(f"{tmp_mc}/bands_{tag}")
-            ).count()
-
-        _stats_count("s")  # warm
-        t0 = time.perf_counter(); _stats_count("s"); t1s = time.perf_counter() - t0
-        t0 = time.perf_counter(); _stats_count("b"); tns = time.perf_counter() - t0
+        time_pair(results, "minhash_stats_corpus",
+                  lambda tag: dd.minhash_index_stats(sp_mc.read.parquet(f"{tmp_mc}/bands_{tag}")), "s", "b")
         dd.release_caches()
-        results["minhash_stats_corpus"] = {
-            "t1": round(t1s, 3), "tN": round(tns, 3), "ratio": round(tns / max(t1s, 1e-9), 2)
-        }
         shutil.rmtree(tmp_mc, ignore_errors=True)
 
     # Winnowing pair join under degenerate duplication (r9): GROUPS
@@ -850,12 +746,9 @@ def main() -> None:
 
         small_h, big_h = hot_corpus(60), hot_corpus(60 * INFLATE)
         assert tx.winnow_pairs(small_h, df_cap=20).count() == 0
-        t0 = time.perf_counter(); tx.winnow_pairs(small_h, df_cap=20).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); n_hot = tx.winnow_pairs(big_h, df_cap=20).count(); tn = time.perf_counter() - t0
+        _, n_hot = time_pair(results, "winnow_hotdup", lambda d: tx.winnow_pairs(d, df_cap=20),
+                             small_h, big_h, warm=False)
         assert n_hot == 0, "df_cap must wholesale-drop the degenerate fingerprints"
-        results["winnow_hotdup"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
 
     # DSIR scoring (r9): the RAW side inflates N× while the target
     # distribution stays fixed — the production shape (small curated
@@ -867,13 +760,8 @@ def main() -> None:
         docs_l = load_table(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
         tgt = docs_l.filter(F.col("lang") == "en")
         raw1 = docs_l.filter(F.col("lang") != "en")
-        rawN = inflate(raw1, ["doc_id"], INFLATE)
-        lp.dsir_scores(tgt, raw1).count()  # warm
-        t0 = time.perf_counter(); lp.dsir_scores(tgt, raw1).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); lp.dsir_scores(tgt, rawN).count(); tn = time.perf_counter() - t0
-        results["dsir_scores"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "dsir_scores", lambda r: lp.dsir_scores(tgt, r), raw1,
+                  inflate(raw1, ["doc_id"], INFLATE))
 
     # Incremental-dedup lookup: the BATCH stays fixed while the corpus
     # INDEX inflates N× — the daily-ingest shape. The index is read from
@@ -898,12 +786,8 @@ def main() -> None:
                 dd.minhash_bands(sig).write.mode("overwrite").parquet(f"{tmp}/bands{tag}")
             s1, b1 = spark.read.parquet(f"{tmp}/sig1"), spark.read.parquet(f"{tmp}/bands1")
             sN, bN = spark.read.parquet(f"{tmp}/sigN"), spark.read.parquet(f"{tmp}/bandsN")
-            dd.minhash_lookup(batch, s1, b1).count()  # warm
-            t0 = time.perf_counter(); dd.minhash_lookup(batch, s1, b1).count(); t1 = time.perf_counter() - t0
-            t0 = time.perf_counter(); dd.minhash_lookup(batch, sN, bN).count(); tn = time.perf_counter() - t0
-            results["minhash_lookup_fixed_batch"] = {
-                "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-            }
+            time_pair(results, "minhash_lookup_fixed_batch", lambda ix: dd.minhash_lookup(batch, *ix),
+                      (s1, b1), (sN, bN))
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
@@ -929,13 +813,7 @@ def main() -> None:
                 out = out.unionByName(p)
             return out
 
-        long_closes = lengthen(closes, INFLATE)
-        tsx.bollinger(closes).count()  # warm
-        t0 = time.perf_counter(); tsx.bollinger(closes).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); tsx.bollinger(long_closes).count(); tn = time.perf_counter() - t0
-        results["bollinger_long_series"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "bollinger_long_series", tsx.bollinger, closes, lengthen(closes, INFLATE))
 
     # Incremental span lookup (r6; r7: df table precomputed): FIXED
     # 50-doc batch vs a 1×/N× posting index — the daily-ingest
@@ -961,12 +839,7 @@ def main() -> None:
                 batch, ix, min_span=12, df_cap=50 * INFLATE, index_df=idf
             )
 
-        spans_lookup_case(docs).count()  # warm
-        t0 = time.perf_counter(); spans_lookup_case(docs).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); spans_lookup_case(big_docs).count(); tn = time.perf_counter() - t0
-        results["spans_lookup"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "spans_lookup", spans_lookup_case, docs, big_docs)
 
     # Adversarial span-dedup pair join (r7): a HIGH-DUPLICATION corpus
     # where every anchor's df sits just under df_cap — the worst case
@@ -995,16 +868,11 @@ def main() -> None:
         def hotdup_case(corpus: DataFrame) -> DataFrame:
             return dd.repeated_spans(corpus, min_span=12, df_cap=D + 5)
 
-        small, big = dup_corpus(GROUPS), dup_corpus(GROUPS * INFLATE)
-        hotdup_case(small).count()  # warm
-        t0 = time.perf_counter(); n1 = hotdup_case(small).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); nn = hotdup_case(big).count(); tn = time.perf_counter() - t0
+        n1, nn = time_pair(results, "spans_hotdup", hotdup_case, dup_corpus(GROUPS),
+                           dup_corpus(GROUPS * INFLATE))
         # output itself scales ×N: every group contributes C(D,2) pairs
         assert n1 == GROUPS * D * (D - 1) // 2, n1
         assert nn == GROUPS * INFLATE * D * (D - 1) // 2, nn
-        results["spans_hotdup"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
 
     # Adversarial containment pair join (r8, verdict item 4): the
     # containment screen shares the Jaccard inverted index, but its
@@ -1042,15 +910,10 @@ def main() -> None:
         # wholesale — the stop-shingle contract, pinned here like
         # tests/test_spans.py pins it for the span family
         assert dd.containment_pairs(small_c, df_frac=None, df_cap=D - 1).count() == 0
-        containment_case(small_c).count()  # warm
-        t0 = time.perf_counter(); c1 = containment_case(small_c).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); cn = containment_case(big_c).count(); tn = time.perf_counter() - t0
+        c1, cn = time_pair(results, "containment_hotdup", containment_case, small_c, big_c)
         # exact duplicates: every group contributes all C(D,2) pairs
         assert c1 == GROUPS * D * (D - 1) // 2, c1
         assert cn == GROUPS * INFLATE * D * (D - 1) // 2, cn
-        results["containment_hotdup"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
 
     # LSH hard-negative mining under ANCHOR-count inflation (r8,
     # verdict item 1 done-bar): corpus fixed, anchor set ×N — the
@@ -1064,13 +927,8 @@ def main() -> None:
                 emb, k=3, anchor_pred=F.col("vec_id") % mod == 0, spread=True
             )
 
-        base_mod = 10 * INFLATE  # N× more anchors when mod shrinks to 10
-        hn_case(base_mod).count()  # warm
-        t0 = time.perf_counter(); hn_case(base_mod).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); hn_case(10).count(); tn = time.perf_counter() - t0
-        results["hard_negatives_anchors"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        # N× more anchors when mod shrinks to 10
+        time_pair(results, "hard_negatives_anchors", hn_case, 10 * INFLATE, 10)
 
     # Degenerate-bucket guard on the all-anchor miner (r9, verdict
     # item 1): a hot cluster of IDENTICAL vectors (mixed labels) lands
@@ -1112,16 +970,8 @@ def main() -> None:
 
         # wholesale-drop contract: no hot id survives into the output
         assert hb_case(M).filter(F.col("query_id") >= 10_000_000).count() == 0
-        hb_case(M).count()  # warm
-        t0 = time.perf_counter(); hb_case(M).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        big_out = hb_case(M * INFLATE)
-        big_out.count()
-        tn = time.perf_counter() - t0
-        assert big_out.filter(F.col("query_id") >= 10_000_000).count() == 0
-        results["hard_negatives_hotbucket"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "hard_negatives_hotbucket", hb_case, M, M * INFLATE)
+        assert hb_case(M * INFLATE).filter(F.col("query_id") >= 10_000_000).count() == 0
 
     # split_by_cluster under corpus inflation (r9, verdict item 6):
     # the docstring claims map-side split exprs + ONE partial-agg
@@ -1134,13 +984,7 @@ def main() -> None:
             assign = d.select("doc_id", (F.col("doc_id") / 3).cast("long").alias("cluster_id"))
             return lp.split_by_cluster(assign, weights)
 
-        big_docs_s = inflate(docs, ["doc_id"], INFLATE)
-        split_case(docs).count()  # warm
-        t0 = time.perf_counter(); split_case(docs).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); split_case(big_docs_s).count(); tn = time.perf_counter() - t0
-        results["split_by_cluster"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
+        time_pair(results, "split_by_cluster", split_case, docs, inflate(docs, ["doc_id"], INFLATE))
 
     # epoch_upsample under repetition inflation (r9, verdict item 6):
     # corpus FIXED, reps ×N — the fan-out is a map-side explode of a
@@ -1155,13 +999,8 @@ def main() -> None:
             staged = docs.select("doc_id", (F.col("doc_id") % 4).cast("int").alias("stage"))
             return lp.epoch_upsample(staged, {s: mult for s in range(4)})
 
-        ups_case(1).count()  # warm
-        t0 = time.perf_counter(); n1 = ups_case(1).count(); t1 = time.perf_counter() - t0
-        t0 = time.perf_counter(); nn = ups_case(mult_n).count(); tn = time.perf_counter() - t0
+        n1, nn = time_pair(results, "epoch_upsample_reps", ups_case, 1, mult_n)
         assert nn == mult_n * n1  # exact fan-out arithmetic
-        results["epoch_upsample_reps"] = {
-            "t1": round(t1, 3), "tN": round(tn, 3), "ratio": round(tn / max(t1, 1e-9), 2)
-        }
 
     print(json.dumps({"inflate": INFLATE, "queries": results}))
 

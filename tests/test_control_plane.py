@@ -11,6 +11,7 @@ from datetime import datetime, timezone
 
 import pytest
 
+from airflow_crypto_etl_spark.checks import CheckFailure
 from airflow_crypto_etl_spark.plans import control_plane as cp
 from airflow_crypto_etl_spark.sources.jdbc import read_jdbc
 
@@ -83,3 +84,21 @@ def test_chain_parameterizes_by_ds(ctx):
     )
     dts = {r[0] for r in gold.select("dt").distinct().collect()}
     assert dts == {DS, ds2}
+
+
+@pytest.mark.parametrize("ds", ["2026-01-13' OR '1'='1", "2026-1-13", "20260113", None])
+def test_ds_is_checked_before_it_reaches_sql(ctx, ds):
+    """A ``ds`` that is not an ISO date is refused before any statement
+    runs: the fact rows stay as the chain left them."""
+    def fact_rows() -> int:
+        return read_jdbc(
+            ctx["spark"], url=ctx["warehouse_url"], table="fact_price", driver=cp.DERBY_DRIVER
+        ).count()
+
+    before = fact_rows()
+    assert before > 0
+    bad = dict(ctx, ds=ds)
+    for stage in (cp.load_fact, cp.validate_gold):
+        with pytest.raises(CheckFailure, match="ISO date"):
+            stage(bad)
+    assert fact_rows() == before
