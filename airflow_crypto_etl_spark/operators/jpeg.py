@@ -152,23 +152,12 @@ def canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, in
     return out
 
 
-def _decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol, the decoder-side view of the canonical
-    assignment."""
-    return {(ln, code): sym for sym, (code, ln) in canonical_codes(bits, vals).items()}
-
-
 _ZIG_ARR = np.array(ZIGZAG)
 
 # 8x8 orthonormal DCT basis: M[u, x] = c(u)/2 * cos((2x+1) u pi / 16).
 _x = np.arange(8)
 _DCT_M = np.cos((2 * _x[None, :] + 1) * _x[:, None] * np.pi / 16) / 2.0
 _DCT_M[0, :] *= 1 / np.sqrt(2)
-
-
-def idct2(coef: np.ndarray) -> np.ndarray:
-    """2-D type-III DCT (inverse of the JPEG FDCT), float64."""
-    return _DCT_M.T @ coef @ _DCT_M
 
 
 # --------------------------------------------------------------------------
@@ -202,66 +191,6 @@ class _BitWriter:
         """Pad the final partial byte with 1-bits (T.81 F.1.2.3)."""
         if self._n:
             self.put((1 << (8 - self._n)) - 1, 8 - self._n)
-
-
-class _BitReader:
-    """Reads entropy-coded bits, un-stuffing FF 00; stops cleanly at any
-    real marker (FF xx, xx != 0) so the caller can inspect it."""
-
-    def __init__(self, buf: bytes, pos: int) -> None:
-        self.buf = buf
-        self.pos = pos
-        self._acc = 0
-        self._n = 0
-
-    def bit(self) -> int:
-        if self._n == 0:
-            b = self.buf[self.pos]
-            if b == 0xFF:
-                nxt = self.buf[self.pos + 1]
-                if nxt != 0x00:
-                    raise ValueError(
-                        f"marker FF{nxt:02X} inside entropy segment (truncated scan?)"
-                    )
-                self.pos += 2
-            else:
-                self.pos += 1
-            self._acc, self._n = b, 8
-        self._n -= 1
-        return (self._acc >> self._n) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-    def sync_restart(self, idx: int) -> None:
-        """Byte-align and consume the expected RSTn marker."""
-        self._n = 0
-        if self.buf[self.pos] != 0xFF or self.buf[self.pos + 1] != 0xD0 + (idx % 8):
-            raise ValueError(
-                f"expected RST{idx % 8} at offset {self.pos}, "
-                f"found {self.buf[self.pos:self.pos + 2].hex()}"
-            )
-        self.pos += 2
-
-    def huff(self, table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code (corrupt stream or wrong table)")
-
-
-def _extend(v: int, size: int) -> int:
-    """T.81 F.12 EXTEND: map the `size`-bit magnitude code to its signed
-    value."""
-    if size == 0:
-        return 0
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
 
 
 # 16-bit-peek Huffman LUTs, cached on the raw DHT payload: every frame

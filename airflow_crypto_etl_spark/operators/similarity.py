@@ -20,11 +20,14 @@ the dedup family.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .layout import widen
 
@@ -116,7 +119,8 @@ def _book_literal_ok(rows: list, max_cells: int = None) -> bool:
     downstream struct-field access at analysis time — and non-finite
     doubles (nan/inf) repr to SQL text the parser rejects. Both cases
     degrade gracefully on the createDataFrame/broadcast branch, which
-    carries an explicit schema and binary doubles."""
+    carries an explicit schema and binary doubles. So does a null
+    vector, element or extra field: a SQL null has no literal here."""
     import math
 
     if not rows:
@@ -124,12 +128,11 @@ def _book_literal_ok(rows: list, max_cells: int = None) -> bool:
     cells = 0
     for row in rows:
         vec = row[1]
+        if vec is None:
+            return False
         cells += len(vec)
-        for x in vec:
-            if not math.isfinite(x):
-                return False
-        for extra in row[2:]:
-            if not math.isfinite(extra):
+        for x in (*vec, *row[2:]):
+            if x is None or not math.isfinite(x):
                 return False
     return cells <= (max_cells if max_cells is not None else _LIT_BOOK_MAX_CELLS)
 
@@ -1012,8 +1015,8 @@ def ivf_centroids_trained(
     clusters keep their seed vectors.
 
     Scale shape: assignment is MAP-SIDE against the broadcast 1-row
-    seed book (the :func:`_coarse_best` / :func:`pq_encode` shape —
-    the corpus never shuffles); the update is ONE partial-agg shuffle
+    seed book (the :func:`_coarse_best` shape — the corpus never
+    shuffles); the update is ONE partial-agg shuffle
     with dim·n_centroids post-shuffle rows (corpus-independent);
     driver state is the bounded dim·n_centroids cell collect (the
     k-means-seed pattern)."""
@@ -1629,37 +1632,151 @@ def _d2(a: Column, b: Column) -> Column:
     )
 
 
-def _pq_code_sql(s: int, sd: int, v: str = "v", cb: str = "cb") -> str:
-    """SQL text of one subspace's nearest-centroid code (the
-    ``code_for`` expression of :func:`pq_encode`): squared-L2 over the
-    subspace-``s`` slices, lexicographic (d, cid) min — one parsed
-    string instead of a per-centroid py4j lambda tree."""
-    sub_v = f"slice({v}, {s * sd + 1}, {sd})"
-    sub_c = f"slice(e.cv, {s * sd + 1}, {sd})"
-    return (
-        f"(array_min(transform({cb}, e -> "
-        f"struct({d2_sql(sub_v, sub_c)} AS d, e.cid AS cid)))).cid"
+def _pq_slices(vecs, n_sub: int, sd: int) -> tuple[np.ndarray, np.ndarray]:
+    """``(x, size)`` of a column of vectors (an Arrow list array, or
+    rows of numbers with None for a SQL null): ``x`` (n, n_sub·sd)
+    holds each vector's first n_sub·sd elements as float64, zero where
+    absent; ``size`` (n, n_sub) is the length of each subspace slice
+    (Spark's ``slice``), or -1 where the vector or an element of the
+    slice is null."""
+    if not isinstance(vecs, pa.Array):
+        vecs = pa.array(list(vecs), pa.list_(pa.float64()))
+    vecs = vecs.cast(pa.list_(pa.float64()))
+    w = n_sub * sd
+    off = vecs.offsets.to_numpy()
+    start, n_el = off[:-1], np.diff(off)
+    # one padding cell at the end stands in for every absent element
+    vals = np.append(vecs.values.to_numpy(zero_copy_only=False), 0.0)
+    nulls = np.append(vecs.values.is_null().to_numpy(zero_copy_only=False), False)
+    j = np.arange(w)
+    idx = np.where(j < n_el[:, None], start[:, None] + j, vals.size - 1)
+    size = np.clip(n_el[:, None] - np.arange(0, w, sd), 0, sd)
+    null = nulls[idx].reshape(-1, n_sub, sd).any(axis=2)
+    null |= vecs.is_null().to_numpy(zero_copy_only=False)[:, None]
+    return vals[idx], np.where(null, -1, size)
+
+
+def pq_assign(v, book, cids, n_sub: int, dim: int) -> np.ndarray:
+    """The PQ assignment kernel; Spark-free, so tests call it directly.
+    Maps ``n`` vectors to their (n, n_sub) int64 codes: per subspace,
+    the cid of the nearest of the ``book`` vectors (whose ids are
+    ``cids``, at least one).
+
+    The squared L2 distance is the sequential fold ``acc = acc + d*d``
+    over the subspace slice, the order of :func:`d2_sql`, so every
+    distance is bit-identical to Spark's. The minimum follows Spark's
+    order on ``struct(d, cid)``: a null distance first, NaN after every
+    number, ties to the smaller cid. A distance is null where either
+    slice is null or has a null element, or where the two slices differ
+    in length (``zip_with`` pads the shorter one with nulls).
+
+    ``v`` and ``book`` are Arrow list arrays or rows of numbers (None
+    for a null); elements past ``dim`` are never read."""
+    sd = dim // n_sub
+    cids = np.asarray(cids, dtype=np.int64)
+    order = np.argsort(cids, kind="stable")
+    cids = cids[order]
+    xv, nv = _pq_slices(v, n_sub, sd)
+    xc, nc = _pq_slices(book, n_sub, sd)
+    xc, nc = xc[order], nc[order]
+    codes = np.empty((len(xv), n_sub), dtype=np.int64)
+    for s in range(n_sub):
+        a, b = xv[:, s * sd : (s + 1) * sd], xc[:, s * sd : (s + 1) * sd]
+        acc = np.zeros((len(a), len(b)))
+        for j in range(sd):
+            d = a[:, j, None] - b[None, :, j]
+            acc = acc + d * d
+        la, lb = nv[:, s, None], nc[None, :, s]
+        null = (la != lb) | (la < 0) | (lb < 0)
+        nan = np.isnan(acc)
+        best = np.where(nan, np.inf, acc).min(axis=1, keepdims=True)
+        pick = (acc == best) | nan.all(axis=1, keepdims=True)
+        pick = np.where(null.any(axis=1, keepdims=True), null, pick)
+        codes[:, s] = cids[pick.argmax(axis=1)]
+    return codes
+
+
+def _pq_code_map(src: DataFrame, book: list, n_sub: int, dim: int) -> DataFrame:
+    """``src``'s first column and the PQ ``codes`` of its last (a vector
+    column) under ``book``, (cid, cv) rows held on the driver: one
+    ``mapInArrow`` pass of :func:`pq_assign`, no shuffle and no
+    broadcast. The first field (name, type, nullability) is copied from
+    ``src``. An empty book codes every subspace to null, as Spark's
+    ``array_min`` of an empty array."""
+    schema = T.StructType(
+        [src.schema.fields[0], T.StructField("codes", T.ArrayType(T.LongType()), False)]
     )
+    cids = [cid for cid, _ in book]
+    cvs = [cv for _, cv in book]
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in it:
+            n = rb.num_rows
+            if cids:
+                flat = pa.array(pq_assign(rb.column(rb.num_columns - 1), cvs, cids, n_sub, dim).ravel())
+            else:
+                flat = pa.nulls(n * n_sub, pa.int64())
+            offsets = pa.array(np.arange(0, n * n_sub + 1, n_sub, dtype=np.int32))
+            codes = pa.ListArray.from_arrays(offsets, flat)
+            yield pa.RecordBatch.from_arrays([rb.column(0), codes], names=schema.names)
+
+    return src.mapInArrow(batches, schema)
 
 
-def _pq_codes_sql(n_sub: int, sd: int, v: str = "v", cb: str = "cb") -> str:
-    """SQL text of the full ``codes`` array (all ``n_sub`` subspaces)."""
-    return "array(" + ", ".join(_pq_code_sql(s, sd, v, cb) for s in range(n_sub)) + ")"
-
-
-def pq_codebook(emb: DataFrame, n_cent: int = PQ_CENT,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """1-row codebook: the first ``n_cent`` corpus vectors, cid-sorted
-    (deterministic seed selection — the same convention as
-    :func:`ivf_topk`'s centroids; a trained per-subspace k-means
-    codebook would slot into the same shape)."""
-    base = emb.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
-    cents = base.filter(F.col(id_col) < n_cent).select(
-        F.col(id_col).alias("cid"), F.col("v").alias("cv")
+def _pq_seed_rows(emb: DataFrame, n_cent: int, id_col: str, vec_col: str) -> list:
+    """The seeded book as driver rows: the first ``n_cent`` corpus
+    vectors as (cid, double vector), cid-sorted — one bounded collect
+    (deterministic seed selection, the convention of :func:`ivf_topk`'s
+    centroids)."""
+    seeds = emb.filter(F.col(id_col) < n_cent).select(
+        F.col(id_col).alias("cid"), F.expr(to_double_sql(_bt(vec_col))).alias("cv")
     )
-    return cents.agg(
-        F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("cv")))).alias("cb")
+    return sorted(((r["cid"], r["cv"]) for r in seeds.collect()), key=lambda r: r[0])
+
+
+def _pq_book(
+    emb: DataFrame, n_cent: int, id_col: str, vec_col: str, codebook: DataFrame | None
+) -> list:
+    """The (cid, cv) driver rows of a 1-row ``codebook`` (one bounded
+    collect of its ``array<struct<cid, cv>>`` column), or of the seeded
+    book when it is None."""
+    if codebook is None:
+        return _pq_seed_rows(emb, n_cent, id_col, vec_col)
+    rows = codebook.collect()
+    if len(rows) != 1:
+        raise ValueError(f"codebook must be one row, got {len(rows)}")
+    return [(e["cid"], e["cv"]) for e in rows[0][0] or []]
+
+
+def _pq_trained_rows(
+    emb: DataFrame, n_sub: int, n_cent: int, dim: int, id_col: str, vec_col: str
+) -> list:
+    """The trained book of :func:`pq_codebook_trained` as driver
+    (cid, cv) rows, cid-sorted."""
+    sd = dim // n_sub
+    # ONE bounded collect of the n_cent seed vectors serves both the
+    # assignment kernel's book and the empty-cell fallback values below
+    seed_rows = _pq_seed_rows(emb, n_cent, id_col, vec_col)
+    base = emb.select(F.expr(to_double_sql(_bt(vec_col))).alias("v"))
+    codes = _pq_code_map(base, seed_rows, n_sub, dim)
+    flat = codes.select(
+        "v", F.posexplode("codes").alias("s", "cid")
+    ).select(
+        "s", "cid",
+        F.posexplode(F.slice(F.col("v"), F.col("s") * sd + 1, sd)).alias("i", "x"),
     )
+    means = (
+        flat.groupBy("s", "cid", "i")
+        .agg(F.sum((F.col("x") * F.lit(_POW2_60)).cast("decimal(38,0)")).alias("sm"),
+             F.count(F.lit(1)).alias("n"))
+        .withColumn("m", F.col("sm").cast("double") / F.lit(_POW2_60) / F.col("n"))
+    )
+    got = {(r["s"], r["cid"], r["i"]): r["m"]
+           for r in means.select("s", "cid", "i", "m").collect()}
+    return [
+        (cid, [got.get(((j // sd), cid, j % sd), sv[j]) for j in range(dim)])
+        for cid, sv in seed_rows
+    ]
 
 
 def pq_codebook_trained(
@@ -1671,9 +1788,8 @@ def pq_codebook_trained(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """TRAINED 1-row PQ codebook: per-subspace Lloyd k-means, one full
-    assign→update round (r9 verdict item 2 — the seeded
-    :func:`pq_codebook` measures a recall FLOOR; this is what PQ
-    actually delivers). Seeds are the seeded codebook itself (the
+    assign→update round (r9 verdict item 2 — the seeded book
+    measures a recall FLOOR; this is what PQ actually delivers). Seeds are the seeded codebook itself (the
     first ``n_cent`` corpus vectors), so the trained book is a strict
     refinement and the recall lift is attributable to training alone.
 
@@ -1691,58 +1807,18 @@ def pq_codebook_trained(
     engines at the oracle's comparison precision empirically, not by
     construction. An empty (subspace, cid) cell keeps its seed value.
 
-    Scale shape: assignment is a map-only pass against the broadcast
-    1-row seed book; the update is ONE partial-agg shuffle whose
-    post-shuffle size is n_sub·n_cent·(dim/n_sub) = dim·n_cent rows —
-    independent of corpus size; the n_cent·dim driver state is tiny
-    (the k-means-seed bounded-collect pattern). Output shape is
-    identical to :func:`pq_codebook` — per-cid FULL-dim vectors whose
-    subspace-s slice is the trained centroid of subspace s — so
-    :func:`pq_encode` / :func:`pq_topk` slot either book unchanged.
+    Scale shape: assignment is the map-only :func:`pq_assign` pass
+    against the seed book held on the driver; the update is ONE
+    partial-agg shuffle whose post-shuffle size is
+    n_sub·n_cent·(dim/n_sub) = dim·n_cent rows — independent of corpus
+    size; the n_cent·dim driver state is tiny (the k-means-seed
+    bounded-collect pattern). Output: one row, ``cb
+    array<struct<cid, cv>>`` sorted by cid — per-cid FULL-dim vectors
+    whose subspace-s slice is the trained centroid of subspace s — the
+    ``codebook`` shape :func:`pq_encode` / :func:`pq_topk` take.
     """
-    sd = dim // n_sub
-    spark = emb.sparkSession
-    base = emb.select(F.col(id_col), F.expr(to_double_sql(_bt(vec_col))).alias("v"))
-    # ONE bounded collect of the n_cent seed vectors serves both the
-    # broadcast seed book (as a local 1-row relation) and the
-    # empty-cell fallback values below — the previous shape aggregated
-    # the seed slice for the broadcast AND re-collected it in a second
-    # job for the fallbacks (guide §1.2: don't compute things twice).
-    seed_rows = sorted(
-        (r["cid"], list(r["cv"]))
-        for r in base.filter(F.col(id_col) < n_cent)
-        .select(F.col(id_col).alias("cid"), F.col("v").alias("cv"))
-        .collect()
-    )
-    if _book_literal_ok(seed_rows):
-        # bounded book: ride the plan as a folded literal (no
-        # BroadcastExchange job — see _LIT_BOOK_MAX_CELLS)
-        enc = base.withColumn("cb", F.expr(_book_literal_sql(seed_rows)))
-    else:
-        seed_cb = spark.createDataFrame(
-            [(seed_rows,)], "cb array<struct<cid: bigint, cv: array<double>>>"
-        )
-        enc = base.crossJoin(F.broadcast(seed_cb))
-    codes = enc.select("v", F.expr(_pq_codes_sql(n_sub, sd)).alias("codes"))
-    flat = codes.select(
-        "v", F.posexplode("codes").alias("s", "cid")
-    ).select(
-        "s", "cid",
-        F.posexplode(F.slice(F.col("v"), F.col("s") * sd + 1, sd)).alias("i", "x"),
-    )
-    means = (
-        flat.groupBy("s", "cid", "i")
-        .agg(F.sum((F.col("x") * F.lit(_POW2_60)).cast("decimal(38,0)")).alias("sm"),
-             F.count(F.lit(1)).alias("n"))
-        .withColumn("m", F.col("sm").cast("double") / F.lit(_POW2_60) / F.col("n"))
-    )
-    got = {(r["s"], r["cid"], r["i"]): r["m"]
-           for r in means.select("s", "cid", "i", "m").collect()}
-    rows = [
-        (cid, [got.get(((j // sd), cid, j % sd), sv[j]) for j in range(dim)])
-        for cid, sv in seed_rows
-    ]
-    cb_df = spark.createDataFrame(rows, "cid bigint, cv array<double>")
+    rows = _pq_trained_rows(emb, n_sub, n_cent, dim, id_col, vec_col)
+    cb_df = emb.sparkSession.createDataFrame(rows, "cid bigint, cv array<double>")
     return cb_df.agg(
         F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("cv")))).alias("cb")
     )
@@ -1759,28 +1835,23 @@ def pq_encode(
 ) -> DataFrame:
     """Product-quantization encode: split each vector into ``n_sub``
     subspaces and record, per subspace, the id of the nearest codebook
-    centroid (squared L2, ties to the smaller cid via lexicographic
-    struct min). Output: (id, codes array<bigint>).
+    centroid (squared L2, ties to the smaller cid — see
+    :func:`pq_assign`). Output: (id, codes array<bigint>).
 
-    Scale shape: the codebook is ONE broadcast row and the assignment
-    is a pure projection (array_min over a transform — whole-stage
-    codegen), so encoding 100 TB of embeddings is a map-only pass with
-    zero shuffle; the encoded corpus is dim·4-bytes → n_sub·8-bytes
-    smaller. The subvector slice inside the per-centroid lambda is
-    re-sliced per centroid (no CSE in higher-order lambdas) — that is
-    ``n_cent`` cheap array copies per row, deliberately traded for
-    staying codegen-side.
+    Scale shape: the codebook is collected once to the driver (it is
+    bounded at ``n_cent`` rows) and the assignment is the numpy kernel
+    :func:`pq_assign` in one ``mapInArrow`` pass, so encoding 100 TB of
+    embeddings is a map-only pass with zero shuffle; the encoded corpus
+    is dim·4-bytes → n_sub·8-bytes smaller. As a column expression the
+    per-centroid ``transform``/``aggregate`` lambdas ran interpreted,
+    outside whole-stage codegen, several times slower than the scan.
 
-    ``codebook`` (1-row, the :func:`pq_codebook` shape) overrides the
-    default seeded book — pass :func:`pq_codebook_trained` for the
+    ``codebook`` (the 1-row :func:`pq_codebook_trained` shape)
+    overrides the default seeded book (the first ``n_cent`` corpus
+    vectors) — pass :func:`pq_codebook_trained` for the
     k-means-trained encoding."""
-    sd = dim // n_sub
-    base = emb.select(F.col(id_col), F.expr(to_double_sql(_bt(vec_col))).alias("v"))
-    cb = codebook if codebook is not None else pq_codebook(emb, n_cent, id_col, vec_col)
-    enc = base.crossJoin(F.broadcast(cb))
-    return enc.select(
-        F.col(id_col), F.expr(_pq_codes_sql(n_sub, sd)).alias("codes")
-    )
+    book = _pq_book(emb, n_cent, id_col, vec_col, codebook)
+    return _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
 
 
 def pq_topk(
@@ -1809,16 +1880,14 @@ def pq_topk(
     the final per-query top-k window moves data, and it moves
     (id, adc) pairs, not vectors.
 
-    ``codebook`` (the :func:`pq_codebook` 1-row shape) overrides the
-    seeded book for BOTH the encode and the LUT — pass
+    ``codebook`` (the 1-row :func:`pq_codebook_trained` shape)
+    overrides the seeded book for BOTH the encode and the LUT — pass
     :func:`pq_codebook_trained` for the trained searcher."""
     sd = dim // n_sub
     base = emb.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
-    cb = codebook if codebook is not None else pq_codebook(emb, n_cent, id_col, vec_col)
-    cents = cb.select(F.explode("cb").alias("e")).select(
-        F.col("e.cid").alias("cid"), F.col("e.cv").alias("cv")
-    )
-    codes = pq_encode(emb, n_sub, n_cent, dim, id_col, vec_col, codebook=cb)
+    book = _pq_book(emb, n_cent, id_col, vec_col, codebook)
+    cents = emb.sparkSession.createDataFrame(book, "cid bigint, cv array<double>")
+    codes = _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
     queries = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col("v").alias("qv")
     )
@@ -1909,49 +1978,26 @@ def pq_index_build(
     ``(codebook, codes)`` table pair that IS the index, the ADC twin
     of :func:`ivf_index_build`'s (centroids, assign) contract.
 
-    ``codebook`` is (cid, cv double[]) — n_cent rows (the 1-row
-    array codebook EXPLODED to plain columns so the parquet
-    round-trip is bit-exact); ``codes`` is (id, codes bigint[]) — one
-    row per corpus vector, its n_sub subspace codes (dim·4 bytes →
-    n_sub·8 bytes). Build once per corpus (``trained=True`` runs the
-    exact Lloyd round of :func:`pq_codebook_trained`; the encode is
-    the map-only :func:`pq_encode` pass), write both to parquet, and
-    run :func:`pq_index_lookup` per ingest batch — the corpus is
-    never re-encoded per call. With ``trained=True`` the normalized-corpus
-    cache it registers stays pinned until :func:`dedup.release_caches`
-    frees it."""
-    if trained:
-        # ONE normalized pass over the corpus feeds BOTH encode passes
-        # (r11 verdict item 2 / guide §1.2): training assigns under the
-        # SEED book, the final encode under the TRAINED book — two
-        # passes inherent to one-round Lloyd + encode, but both were
-        # re-reading and re-normalizing the same corpus. The
-        # session-scoped cache (the round-3 register_cache convention)
-        # materializes (id, double vector) once; the double cast the
-        # downstream builders re-apply is an identity projection over
-        # the cached rows, so values are untouched.
-        from .dedup import register_cache
+    ``codebook`` is (cid, cv double[]) — n_cent plain rows, so the
+    parquet round-trip is bit-exact; ``codes`` is (id, codes bigint[])
+    — one row per corpus vector, its n_sub subspace codes (dim·4 bytes
+    → n_sub·8 bytes). Build once per corpus (``trained=True`` runs the
+    exact Lloyd round of :func:`pq_codebook_trained`, otherwise the book
+    is the first ``n_cent`` corpus vectors), write both to parquet, and run
+    :func:`pq_index_lookup` per ingest batch — the corpus is never
+    re-encoded per call.
 
-        emb = register_cache(
-            emb.selectExpr(
-                _bt(id_col), f"{to_double_sql(_bt(vec_col))} AS {_bt(vec_col)}"
-            )
-        )
-        cb = pq_codebook_trained(emb, n_sub, n_cent, dim, id_col, vec_col)
+    The book stays on the driver: ``codebook`` is a local relation of
+    its rows and ``codes`` is the map-only :func:`pq_assign` pass
+    against them, so neither table aggregates or broadcasts. Nothing is
+    cached; the trained build reads the corpus three times (seed
+    collect, Lloyd round, encode)."""
+    if trained:
+        book = _pq_trained_rows(emb, n_sub, n_cent, dim, id_col, vec_col)
     else:
-        cb = pq_codebook(emb, n_cent, id_col, vec_col)
-    codebook = cb.select(F.explode("cb").alias("e")).select(
-        F.col("e.cid").alias("cid"), F.col("e.cv").alias("cv")
-    )
-    # Encode under the SAME 1-row book the exploded rows above came
-    # from: routing the corpus encode through pq_index_append would
-    # re-aggregate `codebook` straight back into that 1-row relation
-    # (explode → array_sort(collect_list) — two extra plan subtrees per
-    # codes action) for a value-identical book. The build-IS-append
-    # invariant is pinned by tests/test_selection.py::
-    # test_pq_index_build_codes_equal_append (r11 verdict item 6: a
-    # test, not a routing constraint).
-    codes = pq_encode(emb, n_sub, 0, dim, id_col, vec_col, codebook=cb)
+        book = _pq_seed_rows(emb, n_cent, id_col, vec_col)
+    codebook = emb.sparkSession.createDataFrame(book, "cid bigint, cv array<double>")
+    codes = _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
     return codebook, codes
 
 
@@ -1971,9 +2017,9 @@ def pq_index_append(
     contract for all three persisted index families. The codebook is
     FROZEN at build time (a per-batch retrain would silently re-key
     every previously stored code — the reason real PQ deployments
-    version the codebook); per-batch cost is the batch's map-only
-    :func:`pq_encode` pass against the broadcast book, zero shuffle,
-    the corpus never touched.
+    version the codebook); per-batch cost is one bounded collect of the
+    book and the batch's map-only :func:`pq_assign` pass against it,
+    zero shuffle, the corpus never touched.
 
     Persistence contract (the streaming_cms idempotence pattern): the
     caller writes these rows ``batch_id=``-partitioned with dynamic
@@ -1984,13 +2030,8 @@ def pq_index_append(
     row-identical to a rebuild over the union corpus with the same
     codebook (q_ann_pq_index_append pins this through the
     union-corpus oracle)."""
-    packed = codebook.select(
-        F.col("cid"), _to_double(F.col("cv")).alias("cv")
-    ).agg(F.array_sort(F.collect_list(F.struct("cid", "cv"))).alias("cb"))
-    n_cent_live = 0  # pq_encode sizes nothing off n_cent when a codebook is given
-    return pq_encode(
-        batch, n_sub, n_cent_live, dim, id_col, vec_col, codebook=packed
-    )
+    book = [(r["cid"], r["cv"]) for r in codebook.select("cid", "cv").collect()]
+    return _pq_code_map(batch.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
 
 
 def pq_index_lookup(

@@ -1157,8 +1157,9 @@ def q_ann_pq_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook, codes = sim.pq_index_build(emb, trained=True)
     root = _ivf_index_root(sf_dir, "pq_index")
     _write_pair(root, [("codebook", codebook), ("codes", codes)])
-    cb_p = spark.read.parquet(str(root / "codebook"))
-    codes_p = spark.read.parquet(str(root / "codes"))
+    # read back with the schemas just written: no footer-inference jobs
+    cb_p = spark.read.schema(codebook.schema).parquet(str(root / "codebook"))
+    codes_p = spark.read.schema(codes.schema).parquet(str(root / "codes"))
     batch = emb.filter(F.col("vec_id") % IVF_BATCH_MOD == PQ_INDEX_RESIDUE).select(
         (F.col("vec_id") + PQ_INDEX_SHIFT).alias("vec_id"), "embedding"
     )

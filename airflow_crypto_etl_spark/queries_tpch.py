@@ -40,10 +40,6 @@ def _rev():
 _REV_SQL = f"CAST(l_extendedprice * (1 - l_discount) AS {_DEC})"
 
 
-def _ship_date(df: DataFrame) -> DataFrame:
-    return df.withColumn("ship_date", F.to_date("l_shipdate"))
-
-
 # ---------------------------------------------------------------------------
 # Q1 — pricing summary report (scan-heavy single agg)
 # ---------------------------------------------------------------------------

@@ -194,9 +194,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = STAR_TABLES) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = STAR_TABLES) -> None:
-    """Register temp views so operators can also be driven via spark.sql."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -102,3 +102,16 @@ def test_winnowing_is_one_arrow_map_without_shuffle(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) MapInArrow", p)) == 1, p
     assert n_exchanges(p) == 0 and "Exchange" not in p, p
     assert "BatchEvalPython" not in p, p
+
+
+def test_pq_encode_is_one_arrow_map_without_shuffle(spark, sf_dir):
+    # the PQ assignment kernel is a pure map over the scan, its book
+    # captured on the driver: no broadcast, no exchange
+    import re
+
+    from airflow_crypto_etl_spark.operators import similarity as sim
+    from airflow_crypto_etl_spark.sources.tables import load_table
+
+    p = plan_of(spark, sim.pq_encode(load_table(spark, sf_dir, "embeddings")))
+    assert len(re.findall(r"\(\d+\) MapInArrow", p)) == 1, p
+    assert "Exchange" not in p, p

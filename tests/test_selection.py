@@ -13,6 +13,7 @@ import math
 import random
 
 import duckdb
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -280,33 +281,56 @@ def test_ccnet_head_scores_dominate(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _py_d2(a, b):
+    """Squared L2 as Spark's sequential fold over ``zip_with``: null when
+    either side or any element is null, or when the lengths differ
+    (``zip_with`` pads the shorter side with nulls)."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        if x is None or y is None:
+            return None
+        acc = acc + (x - y) * (x - y)
+    return acc
+
+
+def _py_pq_codes(v, cents, n_sub=4, sd=16):
+    """Per subspace, the cid of Spark's ``array_min`` over
+    ``struct(d, cid)``: a null ``d`` sorts first, NaN after every number,
+    then the smaller cid; an empty book codes to null."""
+
+    def sub(x, s):
+        return None if x is None else x[s * sd : (s + 1) * sd]
+
+    def key(dc):
+        d, cid = dc
+        if d is None:
+            return (0, 0, 0.0, cid)
+        return (1, 1, 0.0, cid) if math.isnan(d) else (1, 0, d, cid)
+
+    return [
+        min(((_py_d2(sub(v, s), sub(cv, s)), cid) for cid, cv in cents.items()),
+            key=key, default=(None, None))[1]
+        for s in range(n_sub)
+    ]
+
+
 def _py_pq(emb_rows, n_sub=4, n_cent=16, dim=64, k=10, query_ids=range(8), cents=None):
     sd = dim // n_sub
     vecs = {vid: [float(x) for x in v] for vid, v in emb_rows}
     if cents is None:
         cents = {cid: vecs[cid] for cid in range(n_cent)}
 
-    def d2(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
     def sub(v, s):
         return v[s * sd : (s + 1) * sd]
 
-    codes = {
-        vid: [
-            min(((d2(sub(v, s), sub(cv, s)), cid) for cid, cv in sorted(cents.items())))[1]
-            for s in range(n_sub)
-        ]
-        for vid, v in vecs.items()
-    }
+    codes = {vid: _py_pq_codes(v, cents, n_sub, sd) for vid, v in vecs.items()}
     out = {}
     for q in query_ids:
         qv = vecs[q]
         lut = {
-            (s, cid): d2(sub(qv, s), sub(cv, s))
+            (s, cid): _py_d2(sub(qv, s), sub(cv, s))
             for s in range(n_sub)
             for cid, cv in cents.items()
         }
@@ -351,6 +375,96 @@ def test_pq_encode_contract(spark, sf_dir):
             a = vecs[vid][s * 16 : (s + 1) * 16]
             b = vecs[c][s * 16 : (s + 1) * 16]
             assert list(a) == list(b)
+
+
+def _pq_encode_codes(spark, rows, vec_type="double", cents=None, **kw):
+    """{vec_id: codes} of pq_encode over ``rows``; ``cents`` ({cid: cv},
+    kept in its insertion order) is passed as the 1-row book, None keeps
+    the default seeded book."""
+    emb = spark.createDataFrame(rows, f"vec_id bigint, embedding array<{vec_type}>")
+    book = None
+    if cents is not None:
+        book = spark.createDataFrame(
+            [(list(cents.items()),)], "cb array<struct<cid: bigint, cv: array<double>>>"
+        )
+    return {r["vec_id"]: r["codes"] for r in sim.pq_encode(emb, codebook=book, **kw).collect()}
+
+
+def test_pq_encode_matches_python_reference_on_a_seeded_battery(spark):
+    """pq_encode against the sequential-fold reference on seeded random
+    float vectors: even ids Gaussian, odd ids small integers, whose
+    subspace distances tie exactly and so exercise the smaller-cid rule.
+    Checked under the default seeded book, an explicit book of integer
+    vectors given in descending cid order, and eight subspaces."""
+    rng = random.Random(20261019)
+    rows = [
+        (i, [float(rng.randint(-2, 2)) if i % 2 else rng.gauss(0, 1) for _ in range(64)])
+        for i in range(300)
+    ]
+    # the reference sees the float32 values Spark stores
+    vecs = {i: [float(x) for x in np.float32(v)] for i, v in rows}
+    seeded = {cid: vecs[cid] for cid in range(16)}
+    book = {cid: vecs[2 * cid + 101] for cid in reversed(range(16))}
+    for cents, n_sub, kw in ((None, 4, {}), (book, 4, {}), (book, 8, {"n_sub": 8})):
+        got = _pq_encode_codes(spark, rows, "float", cents, **kw)
+        ref = cents if cents is not None else seeded
+        want = {i: _py_pq_codes(v, ref, n_sub, 64 // n_sub) for i, v in vecs.items()}
+        assert got == want, (n_sub, [i for i in want if got.get(i) != want[i]][:10])
+
+
+def test_pq_encode_degenerate_rows_match_python_reference(spark):
+    """pq_encode on SQL-degenerate input keeps Spark's null and NaN
+    semantics: a null vector or element nulls the subspace distance, which
+    sorts first; NaN sorts last; a short vector's last subspace is shorter
+    than the centroid's and so is null, a long vector's extra elements
+    are ignored; exact ties go to the smaller cid; an empty book codes to
+    null."""
+    rng = random.Random(5)
+
+    def vec():
+        return [rng.gauss(0, 1) for _ in range(64)]
+
+    def edit(v, **cells):
+        v = list(v)
+        for i, x in cells.items():
+            v[int(i[1:])] = x
+        return v
+
+    nan, inf = float("nan"), float("inf")
+    book = {cid: vec() for cid in range(16)}
+    base = vec()
+    rows = [
+        (100, None),
+        (101, edit(base, i5=None)),
+        (102, edit(base, i20=nan)),
+        (103, edit(base, i40=inf)),
+        (104, edit(base, i60=-inf)),
+        (105, base[:60]),
+        (106, base + [1.0, 2.0, 3.0, 4.0]),
+        (107, list(book[3])),
+        (108, list(book[2])),
+        (109, edit(book[5], i0=inf, i16=inf, i32=-inf, i48=-inf)),
+        (110, base),
+    ]
+    tie = {cid: (book[2] if cid == 9 else cv) for cid, cv in reversed(book.items())}
+    bad = dict(book)
+    bad[4] = edit(book[4], i3=nan)
+    bad[6] = edit(book[6], i30=inf)
+    bad[11] = edit(book[11], i50=-inf, i51=inf)
+    bad[13] = edit(book[13], i17=nan, i18=inf)
+    short = {cid: (cv[:60] if cid == 5 else cv) for cid, cv in book.items()}
+    nulls = {cid: (None if cid == 14 else edit(cv, i9=None) if cid == 12 else cv)
+             for cid, cv in book.items()}
+    for name, cents in (("book", book), ("tie", tie), ("non-finite", bad),
+                        ("short", short), ("nulls", nulls), ("empty", {})):
+        got = _pq_encode_codes(spark, rows, cents=cents)
+        want = {i: _py_pq_codes(v, cents) for i, v in rows}
+        assert got == want, (name, {i: (got.get(i), w) for i, w in want.items() if got.get(i) != w})
+    # the default seeded book, whose seeds are the degenerate rows
+    seeds = [(i - 100, v) for i, v in rows if i != 100] + [(100, None), (200, vec())]
+    got = _pq_encode_codes(spark, seeds)
+    cents = {i: v for i, v in seeds if i < 16}
+    assert got == {i: _py_pq_codes(v, cents) for i, v in seeds}
 
 
 def test_pq_recall_bounds(spark, sf_dir):
@@ -832,6 +946,60 @@ def test_pq_index_build_codes_equal_append(spark, sf_dir):
             (r["vec_id"], tuple(r["codes"])) for r in via_append.collect()
         )
         assert got == want and len(got) > 0
+
+
+def test_trained_books_survive_a_null_seed_element(spark, monkeypatch):
+    """A seed vector with a null element is not a plan literal: the
+    trained quantizers take the typed broadcast branch and return the
+    same rows as with the literal form switched off, and the trained PQ
+    index still encodes every vector."""
+    rng = random.Random(3)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(64)]) for i in range(200)]
+    rows[3][1][7] = None
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    assert not sim._book_literal_ok([(0, None)])
+    assert not sim._book_literal_ok([(0, [1.0, None])])
+    assert not sim._book_literal_ok([(0, [1.0], None)])
+
+    def books():
+        return [
+            sorted(repr(tuple(r)) for r in fn().collect())
+            for fn in (
+                lambda: sim.ivf_centroids_trained(emb),
+                lambda: sim.ivf_centroids_trained(emb, metric="l2"),
+                lambda: sim.ivfpq_residual_codebook_trained(emb),
+            )
+        ]
+
+    got = books()
+    monkeypatch.setattr(sim, "_LIT_BOOK_MAX_CELLS", 0)
+    assert got == books()
+    codebook, codes = sim.pq_index_build(emb, trained=True)
+    cents = {r["cid"]: r["cv"] for r in codebook.collect()}
+    vecs = {i: [None if x is None else float(np.float32(x)) for x in v] for i, v in rows}
+    got = {r["vec_id"]: r["codes"] for r in codes.collect()}
+    assert got == {i: _py_pq_codes(v, cents) for i, v in vecs.items()}
+
+
+def test_pq_index_lookup_job_budget(spark, sf_dir, spark_jobs):
+    """q_ann_pq_index_lookup runs at most 10 Spark jobs for a warm
+    construct plus execute: the seed collect, the Lloyd round's two and
+    the two index writes, then the lookup's five."""
+    import __spark_entry__ as entrymod
+    from airflow_crypto_etl_spark.operators.dedup import release_caches
+
+    q = entrymod.queries()["q_ann_pq_index_lookup"]
+
+    def run():
+        try:
+            q(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        finally:
+            release_caches()
+
+    run()
+    with spark_jobs() as jobs:
+        run()
+    assert jobs.n <= 10, jobs.n
 
 
 def test_index_builders_quote_column_names(spark, sf_dir):
