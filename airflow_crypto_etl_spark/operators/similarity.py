@@ -1989,10 +1989,23 @@ def pq_index_build(
 
     The book stays on the driver: ``codebook`` is a local relation of
     its rows and ``codes`` is the map-only :func:`pq_assign` pass
-    against them, so neither table aggregates or broadcasts. Nothing is
-    cached; the trained build reads the corpus three times (seed
-    collect, Lloyd round, encode)."""
+    against them, so neither table aggregates or broadcasts. With
+    ``trained=True`` the normalized-corpus cache it registers stays
+    pinned until :func:`dedup.release_caches` frees it."""
     if trained:
+        # ONE normalized pass over the corpus feeds the seed collect,
+        # the Lloyd round and the final encode. The session-scoped
+        # cache (the round-3 register_cache convention) materializes
+        # (id, double vector) once; the double cast the downstream
+        # builders re-apply is an identity projection over the cached
+        # rows, so values are untouched.
+        from .dedup import register_cache
+
+        emb = register_cache(
+            emb.selectExpr(
+                _bt(id_col), f"{to_double_sql(_bt(vec_col))} AS {_bt(vec_col)}"
+            )
+        )
         book = _pq_trained_rows(emb, n_sub, n_cent, dim, id_col, vec_col)
     else:
         book = _pq_seed_rows(emb, n_cent, id_col, vec_col)
@@ -2311,9 +2324,11 @@ def _coarse_best(v: Column, cb: Column) -> Column:
 
 
 def _rcodes_sql(n_sub: int, sd: int, r: str = "r", rcb: str = "rcb") -> str:
-    """SQL text of the residual codes array — the IVFPQ twin of
-    :func:`_pq_codes_sql`, over the (rid, rv) residual book (one
-    parsed string instead of a per-centroid py4j lambda tree)."""
+    """SQL text of the IVFPQ residual codes array: per subspace, the
+    rid of the nearest (rid, rv) residual-book entry under the
+    ``d2_sql`` fold, ties to the smaller rid (one parsed string instead
+    of a per-centroid py4j lambda tree). :func:`pq_assign` is the numpy
+    form of the same assignment for plain PQ."""
 
     def one(s: int) -> str:
         sub_r = f"slice({r}, {s * sd + 1}, {sd})"
