@@ -147,9 +147,89 @@ def _book_literal_sql(rows: list, fields: tuple = ("cid", "cv")) -> str:
     for row in rows:
         s = f"cast({int(row[0])} as bigint) AS {id_f}, {_dbl_array_sql(list(row[1]))} AS {vec_f}"
         if len(fields) > 2:
-            s += f", {float(row[2])!r}D AS {fields[2]}"
+            s += f", {_dbl_sql(row[2])} AS {fields[2]}"
         parts.append(f"struct({s})")
     return "array(" + ", ".join(parts) + ")"
+
+
+def _with_book(df: DataFrame, rows: list, name: str, fields: tuple) -> DataFrame:
+    """``df`` with the book ``rows`` as column ``name``: an array of
+    struct(``fields`` — id bigint, vector array<double>[, norm double]).
+    A bounded finite book is a folded plan literal (no BroadcastExchange
+    job); any other is a broadcast 1-row relation of the same type."""
+    if _book_literal_ok(rows):
+        return df.withColumn(name, F.expr(_book_literal_sql(rows, fields)))
+    types = ", ".join(f"{f}: {t}" for f, t in zip(fields, ("bigint", "array<double>", "double")))
+    book = df.sparkSession.createDataFrame([(rows,)], f"{name} array<struct<{types}>>")
+    return df.crossJoin(F.broadcast(book))
+
+
+_POW2_60 = 1152921504606846976.0  # 2^60: exact power-of-two scale factor
+
+
+def _exact_mean(x: str) -> Column:
+    """Order-free mean of the double column ``x`` over a group: each
+    value scaled by 2^60 and summed as DECIMAL(38,0), then one double
+    division chain (when that is exact: :func:`_lloyd_update`)."""
+    return (
+        F.sum((F.col(x) * F.lit(_POW2_60)).cast("decimal(38,0)")).cast("double")
+        / F.lit(_POW2_60)
+        / F.count(F.lit(1))
+    )
+
+
+def _book_dim(rows: list) -> int:
+    """Vector length of a (cid, vector) book: its longest vector."""
+    return max((len(r[1]) for r in rows if r[1] is not None), default=0)
+
+
+def _lloyd_update(assigned: DataFrame, seeds: list, n_sub: int) -> list:
+    """The update step of one exact Lloyd round, shared by every trained
+    book: :func:`kmeans_assign`, :func:`ivf_centroids_trained`,
+    :func:`pq_codebook_trained` and
+    :func:`ivfpq_residual_codebook_trained`.
+
+    ``assigned`` carries ``codes`` (the cell id each vector chose in
+    each of ``n_sub`` equal subspaces; a full-dimension book passes
+    ``array(cid)`` with ``n_sub=1``) and ``v`` (array<double>).
+    ``seeds`` are the book's (cid, vector) rows, and ``dim`` is their
+    vector length. Returns the updated (cid, vector) rows in seed
+    order: subspace s of cid's vector is the mean of the s-slices of
+    the vectors coded cid in subspace s, and a cell no vector chose
+    keeps its seed value. An empty seed set returns ``[]`` and runs no
+    job.
+
+    Exactness: each value is scaled by 2^60 and summed as
+    DECIMAL(38,0) (:func:`_exact_mean`), then divided once in double.
+    A float32-originated coordinate is an exact multiple of 2^-60 in
+    double for any |x| ≥ 2^-37 (any normalized-embedding corpus), and
+    a residual of two such coordinates is a multiple of 2^-43 (fixture
+    floor |x| ≥ 2^-20), so every scaled value is an integer and no
+    shuffle merge order can change a bit of the sum: the round is
+    deterministic within each engine, and the SQL oracles unroll it
+    verbatim. Cross-engine caveat (the test_selection ``_q60``
+    finding): Spark's double→decimal cast is string-mediated (17
+    significant digits), so a scaled value ≥ ~2^57 can land a few ulps
+    off the exact integer and off DuckDB's value. The trained books
+    agree across engines at the oracle's comparison precision
+    empirically, not by construction.
+
+    Scale shape: one posexplode projection and ONE partial-agg shuffle
+    whose post-shuffle size is dim·len(seeds) rows, independent of the
+    corpus; the driver holds that bounded cell table."""
+    if not seeds:
+        return []
+    dim = _book_dim(seeds)
+    sd = dim // n_sub
+    flat = assigned.select("v", F.posexplode("codes").alias("s", "cid")).select(
+        "s", "cid", F.posexplode(F.slice(F.col("v"), F.col("s") * sd + 1, sd)).alias("i", "x")
+    )
+    means = flat.groupBy("s", "cid", "i").agg(_exact_mean("x").alias("m"))
+    got = {(r["s"], r["cid"], r["i"]): r["m"] for r in means.collect()}
+    return [
+        (cid, [got.get((j // sd, cid, j % sd), sv[j]) for j in range(dim)])
+        for cid, sv in seeds
+    ]
 
 
 def _normed_base(
@@ -987,7 +1067,6 @@ def ivf_index_retrain(
 def ivf_centroids_trained(
     emb: DataFrame,
     n_centroids: int = 16,
-    dim: int = 64,
     metric: str = "cos",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -1004,78 +1083,43 @@ def ivf_centroids_trained(
     convention) — training assigns under the metric the index
     searches with.
 
-    Update = per-coordinate mean of each cluster, summed as
-    2^60-scaled DECIMAL(38,0) (the :func:`kmeans_assign` /
-    :func:`pq_codebook_trained` idiom) so shuffle merge order cannot
-    change the sums; cross-engine agreement of the resulting doubles
-    is empirical at the oracle's comparison precision (see the
-    pq_codebook_trained caveat). The mean is NOT re-normalized —
-    cosine assignment is scale-invariant in the centroid, so the
-    plain mean is the spherical-k-means direction update. Empty
-    clusters keep their seed vectors.
+    The update is :func:`_lloyd_update` over the full dimension. The
+    mean is NOT re-normalized — cosine assignment is scale-invariant in
+    the centroid, so the plain mean is the spherical-k-means direction
+    update. Empty clusters keep their seed vectors.
 
-    Scale shape: assignment is MAP-SIDE against the broadcast 1-row
-    seed book (the :func:`_coarse_best` shape — the corpus never
-    shuffles); the update is ONE partial-agg shuffle
-    with dim·n_centroids post-shuffle rows (corpus-independent);
-    driver state is the bounded dim·n_centroids cell collect (the
-    k-means-seed pattern)."""
-    spark = emb.sparkSession
+    Scale shape: assignment is MAP-SIDE against the seed book (a plan
+    literal, or a broadcast 1-row relation — :func:`_with_book`; the
+    corpus never shuffles); the update is ONE partial-agg shuffle."""
+    if metric == "cos":
+        # lexicographic max of (cos, -cid): highest cosine, ties to the
+        # smaller cid — the ivf_index_build argmax convention.
+        cid = (
+            f"-array_max(transform(scb, e -> struct("
+            f"{dot_sql('v', 'e.cv')} / (nrm * e.cn) AS s, -e.cid AS ncid))).ncid"
+        )
+    elif metric == "l2":
+        # lexicographic min of (d2, cid) — the _coarse_best convention.
+        cid = (
+            f"array_min(transform(scb, e -> struct("
+            f"{d2_sql('v', 'e.cv')} AS d, e.cid AS cid))).cid"
+        )
+    else:
+        raise ValueError(f"unknown metric: {metric!r} (use 'cos' or 'l2')")
     base = _normed_base(emb, id_col, vec_col, spread)
     # ONE bounded collect of the n_centroids seed vectors serves both
-    # the broadcast seed book (as a local 1-row relation) and the
-    # empty-cluster fallback values below — the previous shape
-    # aggregated the seed slice for the broadcast AND re-collected it
-    # in a second job (guide §1.2: don't compute things twice).
+    # the seed book and the empty-cluster fallback values
     seed_rows = sorted(
         (r["cid"], list(r["cv"]), r["cn"])
         for r in base.filter(F.col(id_col) < n_centroids)
         .select(F.col(id_col).alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cn"))
         .collect()
     )
-    if _book_literal_ok(seed_rows):
-        # bounded book: folded plan literal, no BroadcastExchange job
-        enc = base.withColumn(
-            "scb", F.expr(_book_literal_sql(seed_rows, ("cid", "cv", "cn")))
-        )
-    else:
-        seed_cb = spark.createDataFrame(
-            [(seed_rows,)],
-            "scb array<struct<cid: bigint, cv: array<double>, cn: double>>",
-        )
-        enc = base.crossJoin(F.broadcast(seed_cb))
-    if metric == "cos":
-        # lexicographic max of (cos, -cid): highest cosine, ties to the
-        # smaller cid — the ivf_index_build argmax convention.
-        best = F.expr(
-            f"array_max(transform(scb, e -> struct("
-            f"{dot_sql('v', 'e.cv')} / (nrm * e.cn) AS s, -e.cid AS ncid)))"
-        )
-        assigned = enc.select((-best["ncid"]).alias("cid"), "v")
-    elif metric == "l2":
-        # lexicographic min of (d2, cid) — the _coarse_best convention.
-        best = F.expr(
-            f"array_min(transform(scb, e -> struct("
-            f"{d2_sql('v', 'e.cv')} AS d, e.cid AS cid)))"
-        )
-        assigned = enc.select(best["cid"].alias("cid"), "v")
-    else:  # pragma: no cover - caller contract
-        raise ValueError(f"unknown metric: {metric!r} (use 'cos' or 'l2')")
-    flat = assigned.select("cid", F.posexplode("v").alias("i", "x"))
-    means = (
-        flat.groupBy("cid", "i")
-        .agg(
-            F.sum((F.col("x") * F.lit(_POW2_60)).cast("decimal(38,0)")).alias("sm"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .withColumn("m", F.col("sm").cast("double") / F.lit(_POW2_60) / F.col("n"))
+    assigned = _with_book(base, seed_rows, "scb", ("cid", "cv", "cn")).selectExpr(
+        f"array({cid}) AS codes", "v"
     )
-    got = {(r["cid"], r["i"]): r["m"] for r in means.select("cid", "i", "m").collect()}
-    rows = [
-        (cid, [got.get((cid, j), sv[j]) for j in range(dim)])
-        for cid, sv, _cn in seed_rows
-    ]
-    return spark.createDataFrame(rows, "cid bigint, cv array<double>")
+    rows = _lloyd_update(assigned, [(c, cv) for c, cv, _cn in seed_rows], 1)
+    return emb.sparkSession.createDataFrame(rows, "cid bigint, cv array<double>")
 
 
 def ivf_index_lookup(
@@ -1233,14 +1277,26 @@ def brute_force_topk_arrow(
 # Embedding clustering + semantic dedup (SemDeDup-style)
 # ---------------------------------------------------------------------------
 
-_POW2_60 = 1152921504606846976.0  # 2^60: exact power-of-two scale factor
+# SQL text of the doubles that have no literal form
+_NONFINITE_SQL = {
+    "nan": "CAST('NaN' AS DOUBLE)",
+    "inf": "CAST('Infinity' AS DOUBLE)",
+    "-inf": "CAST('-Infinity' AS DOUBLE)",
+}
+
+
+def _dbl_sql(x: float) -> str:
+    """SQL text of one double. ``repr`` is the shortest round-trip form,
+    and Spark's double literal parse is exact for it, so the planned
+    literal is bit-identical to ``F.lit(float(x))``; NaN and ±inf are
+    cast from their strings, which constant-folds the same way."""
+    r = repr(float(x))
+    return _NONFINITE_SQL.get(r, f"{r}D")
 
 
 def _dbl_array_sql(values: list[float]) -> str:
-    """SQL text of a double-array literal. ``repr`` is the shortest
-    round-trip form, and Spark's double literal parse is exact for it,
-    so the planned literal is bit-identical to ``F.lit(float(x))``."""
-    return "array(" + ", ".join(f"{float(x)!r}D" for x in values) + ")"
+    """SQL text of a double-array literal (see :func:`_dbl_sql`)."""
+    return "array(" + ", ".join(map(_dbl_sql, values)) + ")"
 
 
 def _sq_dist_sql(vec: str, centroid: list[float]) -> str:
@@ -1285,44 +1341,30 @@ def kmeans_assign(
     the closure as literals, and the corpus is never pairwise-joined.
 
     Every step is exactly reproducible by a SQL oracle:
-    - seeding: the k lowest-id vectors (no RNG);
+    - seeding: the k lowest-id vectors (no RNG; fewer when the corpus
+      has fewer rows, and an empty corpus raises ``ValueError``);
     - assignment: sequential-fold squared-L2 with (distance, index)
       tie-breaking;
-    - centroid update: dimension-wise mean via ORDER-FREE exact sums —
-      each float32 value scaled by 2^60 (exact in double for any
-      |x| ≥ 2^-37, true of any normalized-embedding corpus) and summed
-      as DECIMAL(38,0), then one double division chain. Shuffle
-      merge order can never change a bit of the result.
+    - centroid update: :func:`_lloyd_update`, dimension-wise means via
+      order-free exact sums. Shuffle merge order can never change a bit
+      of the result.
 
     At 100 TB: iterations are O(scan) each with map-side combine;
     k·dim driver state is tiny. This is the same aggregate-per-iteration
     shape MLlib KMeans uses, minus RNG (provenance: engine extension —
     the reference has no clustering surface).
     """
-    spark = emb.sparkSession
     base = emb.select(
         F.col(id_col), _to_double(F.col(vec_col)).alias("v")
     )
     seeds = base.orderBy(F.col(id_col)).limit(k).collect()
+    if not seeds:
+        raise ValueError("kmeans_assign needs at least one vector")
     centroids = [list(r["v"]) for r in seeds]
-    dim = len(centroids[0])
     for _ in range(iters):
-        assigned = _assign(base, centroids)
-        expl = assigned.select("cluster", F.posexplode("v").alias("i", "x"))
-        sums = (
-            expl.groupBy("cluster", "i")
-            .agg(
-                F.sum((F.col("x") * F.lit(_POW2_60)).cast("decimal(38,0)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .withColumn("m", F.col("s").cast("double") / F.lit(_POW2_60) / F.col("n"))
-        )
-        got = {
-            (r["cluster"], r["i"]): r["m"] for r in sums.select("cluster", "i", "m").collect()
-        }
-        centroids = [
-            [got.get((j, i), centroids[j][i]) for i in range(dim)] for j in range(k)
-        ]  # empty cluster keeps its previous centroid
+        assigned = _assign(base, centroids).select(F.array("cluster").alias("codes"), "v")
+        # an empty cluster keeps its previous centroid
+        centroids = [cv for _, cv in _lloyd_update(assigned, list(enumerate(centroids)), 1)]
     return _assign(base, centroids).select(
         id_col,
         "cluster",
@@ -1402,8 +1444,8 @@ def embedding_covariance(
     (24+24 ≤ 53 mantissa bits), and scaling by 2^90 makes it an
     integer for any |x| ≥ 2^-22 (any normalized-embedding corpus; the
     fixture floor is 2^-20) — so Σ x_i·x_j accumulates as
-    DECIMAL(38,0) and no shuffle order can change a bit. Means reuse
-    the 2^60 first-moment scale. cov = E[x_i x_j] − μ_i μ_j with one
+    DECIMAL(38,0) and no shuffle order can change a bit. Means are
+    :func:`_exact_mean`. cov = E[x_i x_j] − μ_i μ_j with one
     pinned float op chain.
 
     Scale shape: the registered form explodes to (row, i, x_i) pairs
@@ -1427,10 +1469,7 @@ def embedding_covariance(
             F.count(F.lit(1)).alias("n"),
         )
     )
-    means = base.groupBy("i").agg(
-        F.sum((F.col("x") * F.lit(_POW2_60)).cast("decimal(38,0)")).alias("s"),
-        F.count(F.lit(1)).alias("n"),
-    ).select("i", (F.col("s").cast("double") / F.lit(_POW2_60) / F.col("n")).alias("mu"))
+    means = base.groupBy("i").agg(_exact_mean("x").alias("mu"))
     mj = means.select(F.col("i").alias("j"), F.col("mu").alias("mu_j"))
     return (
         prods.join(F.broadcast(means), "i")
@@ -1531,11 +1570,7 @@ def _exact_means(emb: DataFrame, vec_col: str = "embedding") -> "np.ndarray":
     rows = (
         emb.select(F.posexplode(_to_double(F.col(vec_col))).alias("i", "x"))
         .groupBy("i")
-        .agg(
-            F.sum((F.col("x") * F.lit(_POW2_60)).cast("decimal(38,0)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select("i", (F.col("s").cast("double") / F.lit(_POW2_60) / F.col("n")).alias("mu"))
+        .agg(_exact_mean("x").alias("mu"))
         .collect()
     )
     mu = np.zeros(max(r["i"] for r in rows) + 1)
@@ -1737,91 +1772,52 @@ def _pq_seed_rows(emb: DataFrame, n_cent: int, id_col: str, vec_col: str) -> lis
 def _pq_book(
     emb: DataFrame, n_cent: int, id_col: str, vec_col: str, codebook: DataFrame | None
 ) -> list:
-    """The (cid, cv) driver rows of a 1-row ``codebook`` (one bounded
-    collect of its ``array<struct<cid, cv>>`` column), or of the seeded
-    book when it is None."""
+    """The (cid, cv) driver rows of ``codebook`` (one bounded collect),
+    or of the seeded book when it is None."""
     if codebook is None:
         return _pq_seed_rows(emb, n_cent, id_col, vec_col)
-    rows = codebook.collect()
-    if len(rows) != 1:
-        raise ValueError(f"codebook must be one row, got {len(rows)}")
-    return [(e["cid"], e["cv"]) for e in rows[0][0] or []]
+    return [(r["cid"], r["cv"]) for r in codebook.select("cid", "cv").collect()]
 
 
 def _pq_trained_rows(
-    emb: DataFrame, n_sub: int, n_cent: int, dim: int, id_col: str, vec_col: str
+    emb: DataFrame, n_sub: int, n_cent: int, id_col: str, vec_col: str
 ) -> list:
     """The trained book of :func:`pq_codebook_trained` as driver
     (cid, cv) rows, cid-sorted."""
-    sd = dim // n_sub
     # ONE bounded collect of the n_cent seed vectors serves both the
-    # assignment kernel's book and the empty-cell fallback values below
+    # assignment kernel's book and the empty-cell fallback values
     seed_rows = _pq_seed_rows(emb, n_cent, id_col, vec_col)
     base = emb.select(F.expr(to_double_sql(_bt(vec_col))).alias("v"))
-    codes = _pq_code_map(base, seed_rows, n_sub, dim)
-    flat = codes.select(
-        "v", F.posexplode("codes").alias("s", "cid")
-    ).select(
-        "s", "cid",
-        F.posexplode(F.slice(F.col("v"), F.col("s") * sd + 1, sd)).alias("i", "x"),
-    )
-    means = (
-        flat.groupBy("s", "cid", "i")
-        .agg(F.sum((F.col("x") * F.lit(_POW2_60)).cast("decimal(38,0)")).alias("sm"),
-             F.count(F.lit(1)).alias("n"))
-        .withColumn("m", F.col("sm").cast("double") / F.lit(_POW2_60) / F.col("n"))
-    )
-    got = {(r["s"], r["cid"], r["i"]): r["m"]
-           for r in means.select("s", "cid", "i", "m").collect()}
-    return [
-        (cid, [got.get(((j // sd), cid, j % sd), sv[j]) for j in range(dim)])
-        for cid, sv in seed_rows
-    ]
+    codes = _pq_code_map(base, seed_rows, n_sub, _book_dim(seed_rows))
+    return _lloyd_update(codes, seed_rows, n_sub)
 
 
 def pq_codebook_trained(
     emb: DataFrame,
     n_sub: int = PQ_SUB,
     n_cent: int = PQ_CENT,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """TRAINED 1-row PQ codebook: per-subspace Lloyd k-means, one full
+    """TRAINED PQ codebook: per-subspace Lloyd k-means, one full
     assign→update round (r9 verdict item 2 — the seeded book
-    measures a recall FLOOR; this is what PQ actually delivers). Seeds are the seeded codebook itself (the
-    first ``n_cent`` corpus vectors), so the trained book is a strict
-    refinement and the recall lift is attributable to training alone.
+    measures a recall FLOOR; this is what PQ actually delivers). Seeds
+    are the seeded codebook itself (the first ``n_cent`` corpus
+    vectors), so the trained book is a strict refinement and the recall
+    lift is attributable to training alone.
 
-    Exactness is the :func:`kmeans_assign` contract, applied per
-    subspace: assignment by sequential-fold squared-L2 with
-    (distance, cid) tie-breaking; the centroid update sums
-    2^60-scaled values as DECIMAL(38,0), then one double division
-    chain — shuffle merge order cannot change the sums (the cast is
-    applied per row, before any merge), so the round is deterministic
-    WITHIN each engine and the SQL oracle unrolls it verbatim.
-    Cross-engine caveat (the test_selection _q60 finding): Spark's
-    double→decimal cast is string-mediated (17 significant digits),
-    so a scaled product ≥ ~2^57 can land a few ulps off the exact
-    integer and off DuckDB's value — the trained books agree across
-    engines at the oracle's comparison precision empirically, not by
-    construction. An empty (subspace, cid) cell keeps its seed value.
-
-    Scale shape: assignment is the map-only :func:`pq_assign` pass
-    against the seed book held on the driver; the update is ONE
-    partial-agg shuffle whose post-shuffle size is
-    n_sub·n_cent·(dim/n_sub) = dim·n_cent rows — independent of corpus
-    size; the n_cent·dim driver state is tiny (the k-means-seed
-    bounded-collect pattern). Output: one row, ``cb
-    array<struct<cid, cv>>`` sorted by cid — per-cid FULL-dim vectors
-    whose subspace-s slice is the trained centroid of subspace s — the
-    ``codebook`` shape :func:`pq_encode` / :func:`pq_topk` take.
+    Assignment is the map-only :func:`pq_assign` pass against the seed
+    book held on the driver (sequential-fold squared-L2, ties to the
+    smaller cid); the update is :func:`_lloyd_update` over ``n_sub``
+    subspaces, so an empty (subspace, cid) cell keeps its seed value.
+    Output: ``cid bigint, cv array<double>`` rows, one per seed — per-cid
+    FULL-dim vectors whose subspace-s slice is the trained centroid of
+    subspace s. That is the persisted ``codebook`` table of
+    :func:`pq_index_build`, and the ``codebook`` that :func:`pq_encode`
+    and :func:`pq_topk` take.
     """
-    rows = _pq_trained_rows(emb, n_sub, n_cent, dim, id_col, vec_col)
-    cb_df = emb.sparkSession.createDataFrame(rows, "cid bigint, cv array<double>")
-    return cb_df.agg(
-        F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("cv")))).alias("cb")
-    )
+    rows = _pq_trained_rows(emb, n_sub, n_cent, id_col, vec_col)
+    return emb.sparkSession.createDataFrame(rows, "cid bigint, cv array<double>")
 
 
 def pq_encode(
@@ -1846,10 +1842,9 @@ def pq_encode(
     per-centroid ``transform``/``aggregate`` lambdas ran interpreted,
     outside whole-stage codegen, several times slower than the scan.
 
-    ``codebook`` (the 1-row :func:`pq_codebook_trained` shape)
-    overrides the default seeded book (the first ``n_cent`` corpus
-    vectors) — pass :func:`pq_codebook_trained` for the
-    k-means-trained encoding."""
+    ``codebook`` ((cid, cv) rows: :func:`pq_codebook_trained`, or a
+    persisted :func:`pq_index_build` codebook) overrides the default
+    seeded book (the first ``n_cent`` corpus vectors)."""
     book = _pq_book(emb, n_cent, id_col, vec_col, codebook)
     return _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
 
@@ -1880,8 +1875,8 @@ def pq_topk(
     the final per-query top-k window moves data, and it moves
     (id, adc) pairs, not vectors.
 
-    ``codebook`` (the 1-row :func:`pq_codebook_trained` shape)
-    overrides the seeded book for BOTH the encode and the LUT — pass
+    ``codebook`` ((cid, cv) rows, as for :func:`pq_encode`) overrides
+    the seeded book for BOTH the encode and the LUT — pass
     :func:`pq_codebook_trained` for the trained searcher."""
     sd = dim // n_sub
     base = emb.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
@@ -2006,7 +2001,7 @@ def pq_index_build(
                 _bt(id_col), f"{to_double_sql(_bt(vec_col))} AS {_bt(vec_col)}"
             )
         )
-        book = _pq_trained_rows(emb, n_sub, n_cent, dim, id_col, vec_col)
+        book = _pq_trained_rows(emb, n_sub, n_cent, id_col, vec_col)
     else:
         book = _pq_seed_rows(emb, n_cent, id_col, vec_col)
     codebook = emb.sparkSession.createDataFrame(book, "cid bigint, cv array<double>")
@@ -2043,7 +2038,7 @@ def pq_index_append(
     row-identical to a rebuild over the union corpus with the same
     codebook (q_ann_pq_index_append pins this through the
     union-corpus oracle)."""
-    book = [(r["cid"], r["cv"]) for r in codebook.select("cid", "cv").collect()]
+    book = _pq_book(batch, 0, id_col, vec_col, codebook)
     return _pq_code_map(batch.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
 
 
@@ -2386,7 +2381,6 @@ def ivfpq_residual_codebook_trained(
     n_coarse: int = IVFPQ_COARSE,
     n_sub: int = PQ_SUB,
     n_rcent: int = IVFPQ_RCENT,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     coarse_rows: DataFrame | None = None,
@@ -2395,25 +2389,13 @@ def ivfpq_residual_codebook_trained(
     per-subspace Lloyd round over the corpus RESIDUALS, seeded from
     the seed-slice residuals :func:`ivfpq_topk` defaults to, returned
     in the same (rid, rv) row shape so the searcher slots either book.
-
-    Exactness: residuals are differences of float32-originated
-    coordinates — exact multiples of 2^-43 in double for any
-    normalized-embedding corpus (|x| ≥ 2^-20, the fixture floor), so
-    r·2^60 is an exact integer and the DECIMAL(38,0) update sum is
-    shuffle-order-free, same as :func:`kmeans_assign` /
-    :func:`pq_codebook_trained` — with the same cross-engine caveat
-    (Spark's string-mediated double→decimal cast can land ulps off
-    DuckDB's for scaled products ≥ ~2^57; agreement at the oracle's
-    comparison precision is empirical). Empty (subspace, rid) cells
-    keep their seed values. One partial-agg shuffle (dim·n_rcent
+    The update is :func:`_lloyd_update` over ``n_sub`` subspaces (its
+    exactness argument covers residuals), so empty (subspace, rid)
+    cells keep their seed values. One partial-agg shuffle (dim·n_rcent
     post-shuffle rows), n_rcent·dim driver state."""
-    sd = dim // n_sub
-    spark = emb.sparkSession
     _base, _coarse, resid = _ivfpq_resid(emb, n_coarse, id_col, vec_col, coarse_rows)
-    # ONE bounded collect of the seed residuals serves both the
-    # broadcast residual book (local 1-row relation) and the empty-cell
-    # fallbacks below — the previous shape re-aggregated the seed slice
-    # for the broadcast AND re-collected it in a second job.
+    # ONE bounded collect of the seed residuals serves both the residual
+    # book and the empty-cell fallbacks
     seed_list = sorted(
         (r["rid"], list(r["rv"]))
         for r in resid.filter(
@@ -2422,36 +2404,12 @@ def ivfpq_residual_codebook_trained(
         .select((F.col(id_col) - n_coarse).alias("rid"), F.col("r").alias("rv"))
         .collect()
     )
-    if _book_literal_ok(seed_list):
-        # bounded book: folded plan literal, no BroadcastExchange job
-        enc = resid.withColumn(
-            "rcb", F.expr(_book_literal_sql(seed_list, ("rid", "rv")))
-        )
-    else:
-        rcb = spark.createDataFrame(
-            [(seed_list,)], "rcb array<struct<rid: bigint, rv: array<double>>>"
-        )
-        enc = resid.crossJoin(F.broadcast(rcb))
-    codes = enc.select("r", F.expr(_rcodes_sql(n_sub, sd)).alias("codes"))
-    flat = codes.select(
-        "r", F.posexplode("codes").alias("s", "rid")
-    ).select(
-        "s", "rid",
-        F.posexplode(F.slice(F.col("r"), F.col("s") * sd + 1, sd)).alias("i", "x"),
+    sd = _book_dim(seed_list) // n_sub
+    codes = _with_book(resid, seed_list, "rcb", ("rid", "rv")).select(
+        F.expr(_rcodes_sql(n_sub, sd)).alias("codes"), F.col("r").alias("v")
     )
-    means = (
-        flat.groupBy("s", "rid", "i")
-        .agg(F.sum((F.col("x") * F.lit(_POW2_60)).cast("decimal(38,0)")).alias("sm"),
-             F.count(F.lit(1)).alias("n"))
-        .withColumn("m", F.col("sm").cast("double") / F.lit(_POW2_60) / F.col("n"))
-    )
-    got = {(r["s"], r["rid"], r["i"]): r["m"]
-           for r in means.select("s", "rid", "i", "m").collect()}
-    rows = [
-        (rid, [got.get(((j // sd), rid, j % sd), sv[j]) for j in range(dim)])
-        for rid, sv in seed_list
-    ]
-    return spark.createDataFrame(rows, "rid bigint, rv array<double>")
+    rows = _lloyd_update(codes, seed_list, n_sub)
+    return emb.sparkSession.createDataFrame(rows, "rid bigint, rv array<double>")
 
 
 def ivfpq_topk(

@@ -9,8 +9,11 @@ and pin the dedup election on planted duplicates.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from airflow_crypto_etl_spark.operators import similarity as sim
 from airflow_crypto_etl_spark.sources.tables import load_table
@@ -67,6 +70,28 @@ def test_kmeans_cluster_count_and_coverage(emb):
     assert out.count() == n
     clusters = {r["cluster"] for r in out.select("cluster").distinct().collect()}
     assert clusters <= set(range(8)) and len(clusters) >= 2
+
+
+def test_kmeans_degenerate_input(spark):
+    """More clusters than rows: each row is its own seed and cluster.
+    An empty corpus raises ValueError. A NaN seed element is a valid
+    plan literal: NaN distances sort after every number, so the other
+    rows pick finite centroids."""
+    schema = "vec_id bigint, embedding array<double>"
+    few = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0])], schema)
+    got = {r["vec_id"]: (r["cluster"], r["dist"]) for r in sim.kmeans_assign(few, k=8).collect()}
+    assert got == {0: (0, 0.0), 1: (1, 0.0), 2: (2, 0.0)}
+    with pytest.raises(ValueError):
+        sim.kmeans_assign(spark.createDataFrame([], schema), k=8)
+    nan, inf = float("nan"), float("inf")
+    rows = [(0, [0.0, 0.0]), (1, [nan, 1.0]), (2, [4.0, 4.0]), (3, [2.0, 0.0])]
+    out = sim.kmeans_assign(spark.createDataFrame(rows, schema), k=2).collect()
+    got = {r["vec_id"]: (r["cluster"], r["dist"]) for r in out}
+    assert {i: c for i, (c, _) in got.items()} == {0: 0, 1: 0, 2: 0, 3: 0}
+    assert math.isnan(got[1][1])
+    assert all(math.isfinite(got[i][1]) for i in (0, 2, 3))
+    lit = spark.range(1).select(F.expr(sim._dbl_array_sql([1.5, nan, inf, -inf, -0.0])))
+    assert [repr(x) for x in lit.first()[0]] == ["1.5", "nan", "inf", "-inf", "-0.0"]
 
 
 def test_semantic_dedup_plants(spark):

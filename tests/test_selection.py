@@ -379,14 +379,12 @@ def test_pq_encode_contract(spark, sf_dir):
 
 def _pq_encode_codes(spark, rows, vec_type="double", cents=None, **kw):
     """{vec_id: codes} of pq_encode over ``rows``; ``cents`` ({cid: cv},
-    kept in its insertion order) is passed as the 1-row book, None keeps
-    the default seeded book."""
+    kept in its insertion order) is passed as the (cid, cv) book rows,
+    None keeps the default seeded book."""
     emb = spark.createDataFrame(rows, f"vec_id bigint, embedding array<{vec_type}>")
     book = None
     if cents is not None:
-        book = spark.createDataFrame(
-            [(list(cents.items()),)], "cb array<struct<cid: bigint, cv: array<double>>>"
-        )
+        book = spark.createDataFrame(list(cents.items()), "cid bigint, cv array<double>")
     return {r["vec_id"]: r["codes"] for r in sim.pq_encode(emb, codebook=book, **kw).collect()}
 
 
@@ -690,7 +688,7 @@ def test_pq_trained_codebook_matches_python_reference(spark, sf_dir):
     seed = {cid: vecs[cid] for cid in range(16)}
     want = _py_train_subspace_round(vecs, seed)
     cb = sim.pq_codebook_trained(load_table(spark, sf_dir, "embeddings")).collect()
-    got = {e["cid"]: list(e["cv"]) for e in cb[0]["cb"]}
+    got = {r["cid"]: list(r["cv"]) for r in cb}
     assert set(got) == set(want)
     for cid in want:
         assert all(_close(a, b) for a, b in zip(got[cid], want[cid])), cid
@@ -844,6 +842,50 @@ def test_ivf_centroids_trained_matches_python_reference(spark, sf_dir, metric):
         assert all(_close(a, b) for a, b in zip(got[cid], want[cid])), cid
 
 
+def test_ivf_centroids_trained_rejects_an_unknown_metric_before_any_job(
+    spark, sf_dir, spark_jobs
+):
+    emb = load_table(spark, sf_dir, "embeddings")
+    with spark_jobs() as jobs, pytest.raises(ValueError, match="unknown metric"):
+        sim.ivf_centroids_trained(emb, metric="ip")
+    assert jobs.n == 0
+
+
+@pytest.mark.parametrize("dim", [32, 96])
+def test_trained_books_follow_the_corpus_dimension(spark, dim):
+    """Every trained book takes its dimension from the corpus: on a
+    seeded 40-vector corpus of 32 or 96 dims each trained vector has
+    the corpus's length and equals the Python reference round at that
+    dimension."""
+    rng = random.Random(dim)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    # the reference sees the float32 values Spark stores
+    vecs = {i: [float(x) for x in np.float32(v)] for i, v in rows}
+    seed = {cid: vecs[cid] for cid in range(16)}
+    resid = _py_residuals(list(vecs.items()))
+    want = {
+        "ivf_cos": _py_train_fulldim_round(vecs, seed, "cos", dim),
+        "ivf_l2": _py_train_fulldim_round(vecs, seed, "l2", dim),
+        "pq": _py_train_subspace_round(vecs, seed, dim=dim),
+        "ivfpq": _py_train_subspace_round(
+            resid, {rid: resid[rid + 16] for rid in range(16)}, dim=dim
+        ),
+    }
+    got = {
+        "ivf_cos": sim.ivf_centroids_trained(emb, spread=False),
+        "ivf_l2": sim.ivf_centroids_trained(emb, metric="l2", spread=False),
+        "pq": sim.pq_codebook_trained(emb),
+        "ivfpq": sim.ivfpq_residual_codebook_trained(emb),
+    }
+    for name, book in got.items():
+        book = {r[0]: list(r[1]) for r in book.collect()}
+        assert set(book) == set(want[name]), name
+        for cid, cv in book.items():
+            assert len(cv) == dim, (name, cid, len(cv))
+            assert all(_close(a, b) for a, b in zip(cv, want[name][cid])), (name, cid)
+
+
 def test_ivf_occupancy_contract(spark, sf_dir):
     """q_ann_ivf_occupancy publishes one row per quantizer variant;
     both variants assign the WHOLE corpus (n_vecs equal), and spread
@@ -990,11 +1032,18 @@ def test_trained_books_survive_a_null_seed_element(spark, monkeypatch):
         # a Python task has a fixed cost, so extra passes show as time
         ("q_ann_pq_index_append", 14),
         ("q_ann_pq_index_health", 13),
+        # the trained books: each Lloyd round is one collect of its seeds
+        # and one of the update's cell means
+        ("q_kmeans", 4),
+        ("q_ann_ivf_trained", 16),
+        ("q_ann_pq_trained", 9),
+        ("q_ann_ivfpq_trained", 17),
+        ("q_ann_index_retrain", 20),
     ],
 )
 def test_pq_index_job_budget(spark, sf_dir, spark_jobs, name, budget):
-    """The persisted-PQ queries stay within their Spark job budget for a
-    warm construct plus noop execute."""
+    """The persisted-PQ and trained-book queries stay within their Spark
+    job budget for a warm construct plus noop execute."""
     import __spark_entry__ as entrymod
     from airflow_crypto_etl_spark.operators.dedup import release_caches
 
