@@ -1,18 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Training-data-pipeline extension: approximate-nearest-neighbor over the
-``embeddings`` table. Two paths:
+Training-data-pipeline extension: nearest-neighbor search over the
+``embeddings`` table, exact and approximate:
 
-- ``brute_force_topk`` — exact cosine top-k; the correctness baseline.
-  The dot product is a codegen'd sequential fold over the array
-  (zip_with + aggregate) — JVM-side, no UDF, and bit-deterministic so
-  the oracle reproduces it exactly.
+- ``brute_force_topk`` / ``l2_topk`` — exact cosine / squared-L2
+  top-k; the correctness baselines. The dot product is a codegen'd
+  sequential fold over the array (zip_with + aggregate) — JVM-side, no
+  UDF, and bit-deterministic so the oracle reproduces it exactly.
 - ``lsh_topk`` — random-hyperplane LSH (Charikar 2002): bucket vectors
   by the sign pattern of P hyperplane projections, then search only
   within the query's bucket. The hyperplanes are integer-derived
   constants, so bucketing is deterministic. At 100 TB scale the bucket
   join replaces the O(Q×N) cross join with O(Q×N/2^P) per-bucket work;
   the cross join here is the small-Q verification shape.
+- ``ivf_*`` — inverted lists under a coarse quantizer.
+- ``pq_*`` / ``ivfpq_*`` — product quantization with asymmetric
+  distance search, plain and over IVF residuals. Every PQ code (the
+  encode, the append, the Lloyd round of a trained book, the IVFPQ
+  residual codes) comes from ONE numpy kernel, :func:`pq_assign`, run
+  as a ``mapInArrow`` pass against a book held on the driver, and every
+  entry point takes the vector dimension from that book.
 
 Cosine-threshold near-dup (``cosine_pairs``) is the embedding member of
 the dedup family.
@@ -20,6 +27,7 @@ the dedup family.
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Iterator
 
 import numpy as np
@@ -85,7 +93,8 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def d2_sql(a: str, b: str) -> str:
-    """SQL text of :func:`_d2` (sequential squared-L2 fold)."""
+    """SQL text of squared-L2 distance as a sequential fold (the L2
+    sibling of :func:`dot_sql`: same fold order, same seed)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"cast(0.0 as double), (acc, x) -> acc + x)"
@@ -137,30 +146,28 @@ def _book_literal_ok(rows: list, max_cells: int = None) -> bool:
     return cells <= (max_cells if max_cells is not None else _LIT_BOOK_MAX_CELLS)
 
 
-def _book_literal_sql(rows: list, fields: tuple = ("cid", "cv")) -> str:
-    """SQL text of a literal codebook: array of struct(id bigint,
-    vector array<double>[, norm double]) — constant-folded once at
+def _book_literal_sql(rows: list) -> str:
+    """SQL text of a literal (cid, cv, cn) book: array of struct(cid
+    bigint, cv array<double>, cn double) — constant-folded once at
     planning, bit-identical values to the broadcast relation it
     replaces (repr round-trips every double exactly)."""
-    id_f, vec_f = fields[0], fields[1]
-    parts = []
-    for row in rows:
-        s = f"cast({int(row[0])} as bigint) AS {id_f}, {_dbl_array_sql(list(row[1]))} AS {vec_f}"
-        if len(fields) > 2:
-            s += f", {_dbl_sql(row[2])} AS {fields[2]}"
-        parts.append(f"struct({s})")
-    return "array(" + ", ".join(parts) + ")"
+    return "array(" + ", ".join(
+        f"struct(cast({int(cid)} as bigint) AS cid, {_dbl_array_sql(list(cv))} AS cv, "
+        f"{_dbl_sql(cn)} AS cn)"
+        for cid, cv, cn in rows
+    ) + ")"
 
 
-def _with_book(df: DataFrame, rows: list, name: str, fields: tuple) -> DataFrame:
-    """``df`` with the book ``rows`` as column ``name``: an array of
-    struct(``fields`` — id bigint, vector array<double>[, norm double]).
-    A bounded finite book is a folded plan literal (no BroadcastExchange
+def _with_book(df: DataFrame, rows: list, name: str) -> DataFrame:
+    """``df`` with the (cid, cv, cn) book ``rows`` as column ``name``:
+    an array of struct(cid bigint, cv array<double>, cn double). A
+    bounded finite book is a folded plan literal (no BroadcastExchange
     job); any other is a broadcast 1-row relation of the same type."""
     if _book_literal_ok(rows):
-        return df.withColumn(name, F.expr(_book_literal_sql(rows, fields)))
-    types = ", ".join(f"{f}: {t}" for f, t in zip(fields, ("bigint", "array<double>", "double")))
-    book = df.sparkSession.createDataFrame([(rows,)], f"{name} array<struct<{types}>>")
+        return df.withColumn(name, F.expr(_book_literal_sql(rows)))
+    book = df.sparkSession.createDataFrame(
+        [(rows,)], f"{name} array<struct<cid: bigint, cv: array<double>, cn: double>>"
+    )
     return df.crossJoin(F.broadcast(book))
 
 
@@ -170,17 +177,31 @@ _POW2_60 = 1152921504606846976.0  # 2^60: exact power-of-two scale factor
 def _exact_mean(x: str) -> Column:
     """Order-free mean of the double column ``x`` over a group: each
     value scaled by 2^60 and summed as DECIMAL(38,0), then one double
-    division chain (when that is exact: :func:`_lloyd_update`)."""
-    return (
+    division chain (when that is exact: :func:`_lloyd_update`).
+
+    A NaN or ±inf value has no decimal form (Spark casts it to a null
+    DECIMAL, which ``sum`` would skip while ``count`` still counts it),
+    so a group holding one takes the mean of its plain double sum
+    instead: NaN, or the infinity, as ``avg`` gives. A group of finite
+    values keeps the exact mean, bit for bit."""
+    n = F.count(F.lit(1))
+    total = F.sum(x)
+    exact = (
         F.sum((F.col(x) * F.lit(_POW2_60)).cast("decimal(38,0)")).cast("double")
         / F.lit(_POW2_60)
-        / F.count(F.lit(1))
+        / n
     )
+    nonfinite = F.isnan(total) | (F.abs(total) == F.lit(float("inf")))
+    return F.when(nonfinite, total / n).otherwise(exact)
 
 
 def _book_dim(rows: list) -> int:
-    """Vector length of a (cid, vector) book: its longest vector."""
-    return max((len(r[1]) for r in rows if r[1] is not None), default=0)
+    """Vector length of a (cid, vector) book, the dimension every PQ
+    split and Lloyd update takes: the length most of its vectors share
+    (ties to the longer), so one short, long or null row cannot change
+    the geometry; 0 for a book without vectors."""
+    counts = Counter(len(r[1]) for r in rows if r[1] is not None)
+    return max(counts, key=lambda n: (counts[n], n), default=0)
 
 
 def _lloyd_update(assigned: DataFrame, seeds: list, n_sub: int) -> list:
@@ -1099,7 +1120,8 @@ def ivf_centroids_trained(
             f"{dot_sql('v', 'e.cv')} / (nrm * e.cn) AS s, -e.cid AS ncid))).ncid"
         )
     elif metric == "l2":
-        # lexicographic min of (d2, cid) — the _coarse_best convention.
+        # lexicographic min of (d2, cid) — the coarse assignment of
+        # _ivfpq_resid and the pq_assign tie rule.
         cid = (
             f"array_min(transform(scb, e -> struct("
             f"{d2_sql('v', 'e.cv')} AS d, e.cid AS cid))).cid"
@@ -1115,7 +1137,7 @@ def ivf_centroids_trained(
         .select(F.col(id_col).alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cn"))
         .collect()
     )
-    assigned = _with_book(base, seed_rows, "scb", ("cid", "cv", "cn")).selectExpr(
+    assigned = _with_book(base, seed_rows, "scb").selectExpr(
         f"array({cid}) AS codes", "v"
     )
     rows = _lloyd_update(assigned, [(c, cv) for c, cv, _cn in seed_rows], 1)
@@ -1657,16 +1679,6 @@ PQ_SUB = 4  # subspaces (dim must divide evenly)
 PQ_CENT = 16  # centroids per subspace codebook
 
 
-def _d2(a: Column, b: Column) -> Column:
-    """Squared-L2 distance as a sequential fold (deterministic,
-    codegen'd — the L2 sibling of :func:`dot`)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_slices(vecs, n_sub: int, sd: int) -> tuple[np.ndarray, np.ndarray]:
     """``(x, size)`` of a column of vectors (an Arrow list array, or
     rows of numbers with None for a SQL null): ``x`` (n, n_sub·sd)
@@ -1731,18 +1743,20 @@ def pq_assign(v, book, cids, n_sub: int, dim: int) -> np.ndarray:
     return codes
 
 
-def _pq_code_map(src: DataFrame, book: list, n_sub: int, dim: int) -> DataFrame:
+def _pq_code_map(src: DataFrame, book: list, n_sub: int) -> DataFrame:
     """``src``'s first column and the PQ ``codes`` of its last (a vector
     column) under ``book``, (cid, cv) rows held on the driver: one
     ``mapInArrow`` pass of :func:`pq_assign`, no shuffle and no
-    broadcast. The first field (name, type, nullability) is copied from
-    ``src``. An empty book codes every subspace to null, as Spark's
-    ``array_min`` of an empty array."""
+    broadcast. The book sets the dimension (:func:`_book_dim`). The
+    first field (name, type, nullability) is copied from ``src``. An
+    empty book codes every subspace to null, as Spark's ``array_min``
+    of an empty array."""
     schema = T.StructType(
         [src.schema.fields[0], T.StructField("codes", T.ArrayType(T.LongType()), False)]
     )
     cids = [cid for cid, _ in book]
     cvs = [cv for _, cv in book]
+    dim = _book_dim(book)
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in it:
@@ -1788,7 +1802,7 @@ def _pq_trained_rows(
     # assignment kernel's book and the empty-cell fallback values
     seed_rows = _pq_seed_rows(emb, n_cent, id_col, vec_col)
     base = emb.select(F.expr(to_double_sql(_bt(vec_col))).alias("v"))
-    codes = _pq_code_map(base, seed_rows, n_sub, _book_dim(seed_rows))
+    codes = _pq_code_map(base, seed_rows, n_sub)
     return _lloyd_update(codes, seed_rows, n_sub)
 
 
@@ -1824,7 +1838,6 @@ def pq_encode(
     emb: DataFrame,
     n_sub: int = PQ_SUB,
     n_cent: int = PQ_CENT,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codebook: DataFrame | None = None,
@@ -1844,9 +1857,10 @@ def pq_encode(
 
     ``codebook`` ((cid, cv) rows: :func:`pq_codebook_trained`, or a
     persisted :func:`pq_index_build` codebook) overrides the default
-    seeded book (the first ``n_cent`` corpus vectors)."""
+    seeded book (the first ``n_cent`` corpus vectors). The book's vector
+    length is the dimension the ``n_sub`` subspaces split."""
     book = _pq_book(emb, n_cent, id_col, vec_col, codebook)
-    return _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
+    return _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub)
 
 
 def pq_topk(
@@ -1855,7 +1869,6 @@ def pq_topk(
     k: int = 10,
     n_sub: int = PQ_SUB,
     n_cent: int = PQ_CENT,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codebook: DataFrame | None = None,
@@ -1869,8 +1882,9 @@ def pq_topk(
 
     Scale shape: encode is map-only (see :func:`pq_encode`); the LUT is
     |Q|·n_sub·n_cent rows reduced to |Q| broadcast rows of
-    array<array<double>>; scoring is a broadcast cross join + a
-    constant-time fold per (corpus row, query) — the corpus never
+    per-subspace cid → distance maps (:func:`_adc_tables`); scoring is
+    a broadcast cross join + a constant-time fold per (corpus row,
+    query) — the corpus never
     shuffles and never carries its raw vectors past the encode. Only
     the final per-query top-k window moves data, and it moves
     (id, adc) pairs, not vectors.
@@ -1878,15 +1892,54 @@ def pq_topk(
     ``codebook`` ((cid, cv) rows, as for :func:`pq_encode`) overrides
     the seeded book for BOTH the encode and the LUT — pass
     :func:`pq_codebook_trained` for the trained searcher."""
-    sd = dim // n_sub
     base = emb.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
     book = _pq_book(emb, n_cent, id_col, vec_col, codebook)
     cents = emb.sparkSession.createDataFrame(book, "cid bigint, cv array<double>")
-    codes = _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
+    codes = _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub)
     queries = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col("v").alias("qv")
     )
-    return _pq_adc_search(codes, queries, cents, n_sub, sd, k, id_col)
+    return _pq_adc_search(codes, queries, cents, n_sub, k, id_col)
+
+
+def _adc_tables(lut: DataFrame, keys: list, code: str, n_sub: int) -> DataFrame:
+    """Per-``keys`` ADC lookup table ``tbl`` of ``lut``'s (``keys``, s,
+    ``code``, d) cells: one map per subspace from the book's ``code``
+    id to the distance, for :func:`_adc_sql`.
+
+    A code-KEYED map, not a position-indexed array: codes store the
+    centroid's id, and a book need not have dense 0..n-1 ids (one built
+    on a base corpus that lacks a seed id, or a caller's residual book)
+    — positional indexing would read the wrong cell, or throw, the
+    moment an id is absent or shifted.
+
+    ONE groupBy pass builds the whole table (r11 verdict item 3 / guide
+    §1.2): collect every (s, code, d) cell of a key at once and split it
+    into per-subspace maps locally. The lexicographic array_sort on
+    struct(s, code, d) orders by s then code, and filter() preserves
+    that order, so each subspace's map_from_entries sees code-ascending
+    entries."""
+    return lut.groupBy(*keys).agg(
+        F.expr(f"array_sort(collect_list(struct(s, {code}, d)))").alias("_scd")
+    ).select(
+        *keys,
+        F.expr(
+            f"transform(sequence(0, {n_sub - 1}), s -> "
+            "map_from_entries(transform(filter(_scd, e -> e.s = s), "
+            f"e -> struct(e.{code}, e.d))))"
+        ).alias("tbl"),
+    )
+
+
+def _adc_sql(n_sub: int) -> Column:
+    """The ADC score of a ``codes`` row against its :func:`_adc_tables`
+    ``tbl``: Σ_s tbl[s][codes[s]], folded in subspace order so the
+    double sum is deterministic."""
+    return F.expr(
+        f"aggregate(sequence(0, {n_sub - 1}), cast(0.0 as double), "
+        f"(acc, s) -> acc + element_at(element_at(tbl, s + 1), "
+        f"element_at(codes, s + 1)))"
+    )
 
 
 def _pq_adc_search(
@@ -1894,7 +1947,6 @@ def _pq_adc_search(
     queries: DataFrame,
     cents: DataFrame,
     n_sub: int,
-    sd: int,
     k: int,
     id_col: str,
 ) -> DataFrame:
@@ -1903,7 +1955,10 @@ def _pq_adc_search(
     the constant-time ADC fold over the coded corpus and the per-query
     top-k rank window. ``queries`` carries (query_id, qv double[]);
     ``codes`` carries (id, codes). One implementation, so the
-    rebuild-per-call and persisted-index paths cannot drift."""
+    rebuild-per-call and persisted-index paths cannot drift. The slice
+    width is each book row's ``size(cv) div n_sub``, so the book sets
+    the dimension here too, without a job to read it."""
+    sd = f"cast(size(cv) div {n_sub} as int)"
     lut = (
         queries.crossJoin(F.broadcast(cents))
         .select("query_id", "qv", "cid", "cv")
@@ -1916,40 +1971,10 @@ def _pq_adc_search(
         )
         .select("query_id", "s", "cid", "d")
     )
-    # drow is a cid-KEYED map, not a position-indexed array: codes
-    # store the centroid's cid, and a codebook built on a base corpus
-    # (pq_index_append's frozen-book contract) need not have dense
-    # 0..n_cent-1 cids — positional indexing would silently read the
-    # wrong cell (or throw) the moment a seed id is absent.
-    #
-    # ONE groupBy pass builds the whole per-query table (r11 verdict
-    # item 3 / guide §1.2): collect every (s, cid, d) cell of a query
-    # at once and split it into per-subspace maps locally. The
-    # lexicographic array_sort on struct(s, cid, d) orders by s then
-    # cid, and filter() preserves that order, so each subspace's
-    # map_from_entries sees the same cid-ascending entries the previous
-    # two-pass shape produced — identical maps, one exchange less.
-    tbl = (
-        lut.groupBy("query_id")
-        .agg(F.expr("array_sort(collect_list(struct(s, cid, d)))").alias("_scd"))
-        .select(
-            "query_id",
-            F.expr(
-                f"transform(sequence(0, {n_sub - 1}), s -> "
-                "map_from_entries(transform(filter(_scd, e -> e.s = s), "
-                "e -> struct(e.cid, e.d))))"
-            ).alias("tbl"),
-        )
-    )
-    adc = F.expr(
-        f"aggregate(sequence(0, {n_sub - 1}), cast(0.0 as double), "
-        f"(acc, s) -> acc + element_at(element_at(tbl, s + 1), "
-        f"element_at(codes, s + 1)))"
-    )
     scored = (
-        codes.crossJoin(F.broadcast(tbl))
+        codes.crossJoin(F.broadcast(_adc_tables(lut, ["query_id"], "cid", n_sub)))
         .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("adc", adc)
+        .withColumn("adc", _adc_sql(n_sub))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col(id_col).asc())
     return (
@@ -1963,7 +1988,6 @@ def pq_index_build(
     emb: DataFrame,
     n_sub: int = PQ_SUB,
     n_cent: int = PQ_CENT,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     trained: bool = True,
@@ -2005,7 +2029,7 @@ def pq_index_build(
     else:
         book = _pq_seed_rows(emb, n_cent, id_col, vec_col)
     codebook = emb.sparkSession.createDataFrame(book, "cid bigint, cv array<double>")
-    codes = _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
+    codes = _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub)
     return codebook, codes
 
 
@@ -2013,7 +2037,6 @@ def pq_index_append(
     batch: DataFrame,
     codebook: DataFrame,
     n_sub: int = PQ_SUB,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -2039,7 +2062,7 @@ def pq_index_append(
     codebook (q_ann_pq_index_append pins this through the
     union-corpus oracle)."""
     book = _pq_book(batch, 0, id_col, vec_col, codebook)
-    return _pq_code_map(batch.select(F.col(id_col), F.col(vec_col)), book, n_sub, dim)
+    return _pq_code_map(batch.select(F.col(id_col), F.col(vec_col)), book, n_sub)
 
 
 def pq_index_lookup(
@@ -2048,7 +2071,6 @@ def pq_index_lookup(
     codes: DataFrame,
     k: int = 10,
     n_sub: int = PQ_SUB,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -2068,7 +2090,7 @@ def pq_index_lookup(
         F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
     )
     cents = codebook.select(F.col("cid"), _to_double(F.col("cv")).alias("cv"))
-    return _pq_adc_search(codes, queries, cents, n_sub, dim // n_sub, k, id_col)
+    return _pq_adc_search(codes, queries, cents, n_sub, k, id_col)
 
 
 def pq_index_compact(
@@ -2233,7 +2255,6 @@ def pq_recall(
     k: int = 10,
     n_sub: int = PQ_SUB,
     n_cent: int = PQ_CENT,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codebook: DataFrame | None = None,
@@ -2248,7 +2269,7 @@ def pq_recall(
         "query_id", F.col("neighbor_id").alias("t")
     )
     approx = pq_topk(
-        emb, query_ids, k=k, n_sub=n_sub, n_cent=n_cent, dim=dim,
+        emb, query_ids, k=k, n_sub=n_sub, n_cent=n_cent,
         id_col=id_col, vec_col=vec_col, codebook=codebook,
     ).select("query_id", F.col("neighbor_id").alias("a"))
     return _recall_vs_exact(exact, approx)
@@ -2304,59 +2325,30 @@ IVFPQ_PROBE = 4    # lists probed per query
 IVFPQ_RCENT = 16   # residual-codebook centroids per subspace
 
 
-def _coarse_best(v: Column, cb: Column) -> Column:
-    """Nearest coarse centroid of vector ``v`` over the 1-row codebook
-    array ``cb`` of (cid, cv): lexicographic array_min of
-    (full-dim d2, cid, cv) — ties impossible past cid. Map-side."""
-    return F.array_min(
-        F.transform(
-            cb,
-            lambda e: F.struct(
-                _d2(v, e["cv"]).alias("d"), e["cid"].alias("cid"), e["cv"].alias("cv")
-            ),
-        )
-    )
-
-
-def _rcodes_sql(n_sub: int, sd: int, r: str = "r", rcb: str = "rcb") -> str:
-    """SQL text of the IVFPQ residual codes array: per subspace, the
-    rid of the nearest (rid, rv) residual-book entry under the
-    ``d2_sql`` fold, ties to the smaller rid (one parsed string instead
-    of a per-centroid py4j lambda tree). :func:`pq_assign` is the numpy
-    form of the same assignment for plain PQ."""
-
-    def one(s: int) -> str:
-        sub_r = f"slice({r}, {s * sd + 1}, {sd})"
-        sub_c = f"slice(e.rv, {s * sd + 1}, {sd})"
-        return (
-            f"(array_min(transform({rcb}, e -> "
-            f"struct({d2_sql(sub_r, sub_c)} AS d, e.rid AS rid)))).rid"
-        )
-
-    return "array(" + ", ".join(one(s) for s in range(n_sub)) + ")"
-
-
 def _ivfpq_resid(
     emb: DataFrame, n_coarse: int, id_col: str, vec_col: str,
     coarse_rows: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(base, coarse, resid): coarse-assign every vector and carry its
+    """(base, coarse_cb, resid): coarse-assign every vector and carry its
     residual — the shared front half of :func:`ivfpq_topk` and
-    :func:`ivfpq_residual_codebook_trained`. Both passes are map-only
-    against the broadcast 1-row coarse codebook. ``coarse_rows``
-    ((cid, cv) rows — :func:`ivf_centroids_trained` with
-    ``metric="l2"``, this stage's assignment metric) overrides the
+    :func:`ivfpq_residual_codebook_trained`. The coarse book is held on
+    the driver as (cid, cv) rows (one bounded collect of the seed
+    vectors); ``coarse_cb`` is a 1-row local relation of them as the
+    array ``ccb``, and the residual pass is map-only against it
+    broadcast. ``coarse_rows`` ((cid, cv) rows — :func:`ivf_centroids_trained`
+    with ``metric="l2"``, this stage's assignment metric) overrides the
     id-seeded coarse quantizer (r10 verdict item 1)."""
     base = emb.select(F.col(id_col), F.expr(to_double_sql(_bt(vec_col))).alias("v"))
     if coarse_rows is not None:
-        coarse = coarse_rows.select(
-            F.col("cid"), F.expr(to_double_sql("cv")).alias("cv")
-        )
+        src = coarse_rows.select(F.col("cid"), F.expr(to_double_sql("cv")).alias("cv"))
     else:
-        coarse = base.filter(F.col(id_col) < n_coarse).select(
+        src = base.filter(F.col(id_col) < n_coarse).select(
             F.col(id_col).alias("cid"), F.col("v").alias("cv")
         )
-    coarse_cb = coarse.agg(F.expr("array_sort(collect_list(struct(cid, cv)))").alias("ccb"))
+    book = sorted(((r["cid"], r["cv"]) for r in src.collect()), key=lambda r: r[0])
+    coarse_cb = emb.sparkSession.createDataFrame(
+        [(book,)], "ccb array<struct<cid: bigint, cv: array<double>>>"
+    )
     resid = (
         base.crossJoin(F.broadcast(coarse_cb))
         .select(
@@ -2373,7 +2365,17 @@ def _ivfpq_resid(
             F.expr("zip_with(v, _best.cv, (x, y) -> x - y)").alias("r"),
         )
     )
-    return base, coarse, resid
+    return base, coarse_cb, resid
+
+
+def _ivfpq_seed_rcb(resid: DataFrame, n_coarse: int, n_rcent: int, id_col: str) -> list:
+    """The seeded residual book as driver (rid, rv) rows, rid-sorted:
+    the residuals of the vectors with id in [n_coarse, n_coarse +
+    n_rcent), rid = id - n_coarse — one bounded collect."""
+    rows = resid.filter(
+        (F.col(id_col) >= n_coarse) & (F.col(id_col) < n_coarse + n_rcent)
+    ).select((F.col(id_col) - n_coarse).alias("rid"), F.col("r").alias("rv"))
+    return sorted(((r["rid"], r["rv"]) for r in rows.collect()), key=lambda r: r[0])
 
 
 def ivfpq_residual_codebook_trained(
@@ -2389,25 +2391,17 @@ def ivfpq_residual_codebook_trained(
     per-subspace Lloyd round over the corpus RESIDUALS, seeded from
     the seed-slice residuals :func:`ivfpq_topk` defaults to, returned
     in the same (rid, rv) row shape so the searcher slots either book.
-    The update is :func:`_lloyd_update` over ``n_sub`` subspaces (its
-    exactness argument covers residuals), so empty (subspace, rid)
-    cells keep their seed values. One partial-agg shuffle (dim·n_rcent
-    post-shuffle rows), n_rcent·dim driver state."""
-    _base, _coarse, resid = _ivfpq_resid(emb, n_coarse, id_col, vec_col, coarse_rows)
+    Assignment is the map-only :func:`pq_assign` pass against the seed
+    residuals held on the driver; the update is :func:`_lloyd_update`
+    over ``n_sub`` subspaces (its exactness argument covers residuals),
+    so empty (subspace, rid) cells keep their seed values. One
+    partial-agg shuffle (dim·n_rcent post-shuffle rows), n_rcent·dim
+    driver state."""
+    _base, _coarse_cb, resid = _ivfpq_resid(emb, n_coarse, id_col, vec_col, coarse_rows)
     # ONE bounded collect of the seed residuals serves both the residual
     # book and the empty-cell fallbacks
-    seed_list = sorted(
-        (r["rid"], list(r["rv"]))
-        for r in resid.filter(
-            (F.col(id_col) >= n_coarse) & (F.col(id_col) < n_coarse + n_rcent)
-        )
-        .select((F.col(id_col) - n_coarse).alias("rid"), F.col("r").alias("rv"))
-        .collect()
-    )
-    sd = _book_dim(seed_list) // n_sub
-    codes = _with_book(resid, seed_list, "rcb", ("rid", "rv")).select(
-        F.expr(_rcodes_sql(n_sub, sd)).alias("codes"), F.col("r").alias("v")
-    )
+    seed_list = _ivfpq_seed_rcb(resid, n_coarse, n_rcent, id_col)
+    codes = _pq_code_map(resid.select(F.col("r").alias("v")), seed_list, n_sub)
     rows = _lloyd_update(codes, seed_list, n_sub)
     return emb.sparkSession.createDataFrame(rows, "rid bigint, rv array<double>")
 
@@ -2420,7 +2414,6 @@ def ivfpq_topk(
     n_probe: int = IVFPQ_PROBE,
     n_sub: int = PQ_SUB,
     n_rcent: int = IVFPQ_RCENT,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     rcb_rows: DataFrame | None = None,
@@ -2437,9 +2430,12 @@ def ivfpq_topk(
     — trained k-means codebooks slot into the same shape.
 
     Scale shape — this is the layout a 100 TB vector store actually
-    ships: coarse assignment AND residual encoding are map-only passes
-    against two 1-row broadcast codebooks (the corpus never shuffles
-    and stores only (list_id, n_sub codes) per vector); the candidate
+    ships: coarse assignment is a map-only pass against the broadcast
+    1-row coarse codebook, and residual encoding is one map-only
+    :func:`pq_assign` pass against the residual book held on the driver
+    (bounded at ``n_rcent`` rows, and its vector length is the
+    dimension); the corpus never shuffles and stores only (list_id,
+    n_sub codes) per vector. The candidate
     step is an EQUI-join on list_id against a broadcast
     (query, probed-list, LUT) table, so each query pays only its
     n_probe/n_coarse fraction of the corpus, with ADC a constant-time
@@ -2453,28 +2449,25 @@ def ivfpq_topk(
     id-seeded coarse quantizer; train the residual book AGAINST the
     same coarse rows (pass ``coarse_rows`` to both) or the codes and
     LUTs quantize different residual spaces."""
-    sd = dim // n_sub
-    base, coarse, resid = _ivfpq_resid(emb, n_coarse, id_col, vec_col, coarse_rows)
+    base, coarse_cb, resid = _ivfpq_resid(emb, n_coarse, id_col, vec_col, coarse_rows)
     if rcb_rows is None:
-        # residual codebook: residuals of the seed slice, rid = id - n_coarse
-        rcb_rows = resid.filter(
-            (F.col(id_col) >= n_coarse) & (F.col(id_col) < n_coarse + n_rcent)
-        ).select((F.col(id_col) - n_coarse).alias("rid"), F.col("r").alias("rv"))
-    rcb = rcb_rows.agg(F.expr("array_sort(collect_list(struct(rid, rv)))").alias("rcb"))
-    enc = (
-        resid.crossJoin(F.broadcast(rcb))
-        .select(
-            F.col(id_col),
-            "list_id",
-            F.expr(_rcodes_sql(n_sub, sd)).alias("codes"),
-        )
-    )
-    # queries: probe the n_probe nearest coarse lists (tiny window)
+        rcb = _ivfpq_seed_rcb(resid, n_coarse, n_rcent, id_col)
+    else:
+        rcb = [(r["rid"], r["rv"]) for r in rcb_rows.select("rid", "rv").collect()]
+    sd = _book_dim(rcb) // n_sub
+    # the (id, list_id) key rides the kernel pass as one struct column
+    enc = _pq_code_map(
+        resid.select(F.struct(F.col(id_col), "list_id").alias("_key"), "r"), rcb, n_sub
+    ).select("_key.*", "codes")
+    # queries: probe the n_probe nearest coarse lists (tiny window),
+    # against the same broadcast coarse book the residual pass reads
     queries = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col("v").alias("qv")
     )
-    probe_scored = queries.crossJoin(F.broadcast(coarse)).withColumn(
-        "_dc", F.expr(d2_sql("qv", "cv"))
+    probe_scored = (
+        queries.crossJoin(F.broadcast(coarse_cb))
+        .select("query_id", "qv", F.inline("ccb"))
+        .withColumn("_dc", F.expr(d2_sql("qv", "cv")))
     )
     wp = Window.partitionBy("query_id").orderBy(F.col("_dc").asc(), F.col("cid").asc())
     probed = (
@@ -2487,8 +2480,9 @@ def ivfpq_topk(
         )
     )
     # per-(query, probed list) ADC lookup table over the residual codebook
+    rcb_df = emb.sparkSession.createDataFrame(rcb, "rid bigint, rv array<double>")
     lut = (
-        probed.crossJoin(F.broadcast(rcb_rows))
+        probed.crossJoin(F.broadcast(rcb_df))
         .withColumn("s", F.expr(f"explode(sequence(0, {n_sub - 1}))"))
         .withColumn(
             "d",
@@ -2498,36 +2492,13 @@ def ivfpq_topk(
         )
         .select("query_id", "cid", "s", "rid", "d")
     )
-    # ONE groupBy pass per (query, probed list) instead of two (r11
-    # verdict item 3 / guide §1.2): collect all (s, rid, d) cells at
-    # once; the lexicographic sort orders by s then rid, filter()
-    # preserves that order, so each subspace's positional drow (rid
-    # ascending — rids are dense 0..n_rcent-1 by construction) is
-    # identical to the previous two-pass shape. One exchange less per
-    # search.
-    tblq = (
-        lut.groupBy("query_id", "cid")
-        .agg(F.expr("array_sort(collect_list(struct(s, rid, d)))").alias("_srd"))
-        .select(
-            "query_id",
-            "cid",
-            F.expr(
-                f"transform(sequence(0, {n_sub - 1}), s -> "
-                "transform(filter(_srd, e -> e.s = s), e -> e.d))"
-            ).alias("tbl"),
-        )
-    )
-    adc = F.expr(
-        f"aggregate(sequence(0, {n_sub - 1}), cast(0.0 as double), "
-        f"(acc, s) -> acc + element_at(element_at(tbl, s + 1), "
-        f"cast(element_at(codes, s + 1) as int) + 1))"
-    )
+    tblq = _adc_tables(lut, ["query_id", "cid"], "rid", n_sub)
     scored = (
         enc.join(
             F.broadcast(tblq),
             (F.col("list_id") == F.col("cid")) & (F.col(id_col) != F.col("query_id")),
         )
-        .withColumn("adc", adc)
+        .withColumn("adc", _adc_sql(n_sub))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col(id_col).asc())
     return (

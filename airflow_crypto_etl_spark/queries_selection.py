@@ -163,7 +163,7 @@ _PQ_SD = 64 // _PQ_SUB
 
 def _pq_d2_sql(a: str, b: str, s: str, sd: int) -> str:
     """Squared-L2 over subspace ``s`` of lists a, b — same fold order as
-    operators.similarity._d2 (position-ascending, 0.0 seed)."""
+    operators.similarity.d2_sql (position-ascending, 0.0 seed)."""
     return (
         f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {sd + 1}), "
         f"i -> ({a}[{s}*{sd}+i] - {b}[{s}*{sd}+i]) * ({a}[{s}*{sd}+i] - {b}[{s}*{sd}+i]))), "

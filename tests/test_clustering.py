@@ -75,8 +75,10 @@ def test_kmeans_cluster_count_and_coverage(emb):
 def test_kmeans_degenerate_input(spark):
     """More clusters than rows: each row is its own seed and cluster.
     An empty corpus raises ValueError. A NaN seed element is a valid
-    plan literal: NaN distances sort after every number, so the other
-    rows pick finite centroids."""
+    plan literal: NaN distances sort after every number, and tie to the
+    smaller cluster. The NaN row joins cluster 0, so that cluster's
+    updated mean is NaN in the first coordinate (as ``avg`` gives) and
+    every distance to it is NaN."""
     schema = "vec_id bigint, embedding array<double>"
     few = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0])], schema)
     got = {r["vec_id"]: (r["cluster"], r["dist"]) for r in sim.kmeans_assign(few, k=8).collect()}
@@ -88,10 +90,28 @@ def test_kmeans_degenerate_input(spark):
     out = sim.kmeans_assign(spark.createDataFrame(rows, schema), k=2).collect()
     got = {r["vec_id"]: (r["cluster"], r["dist"]) for r in out}
     assert {i: c for i, (c, _) in got.items()} == {0: 0, 1: 0, 2: 0, 3: 0}
-    assert math.isnan(got[1][1])
-    assert all(math.isfinite(got[i][1]) for i in (0, 2, 3))
+    assert all(math.isnan(d) for _, d in got.values())
     lit = spark.range(1).select(F.expr(sim._dbl_array_sql([1.5, nan, inf, -inf, -0.0])))
     assert [repr(x) for x in lit.first()[0]] == ["1.5", "nan", "inf", "-inf", "-0.0"]
+
+
+def test_exact_mean_propagates_non_finite_values(spark):
+    """A NaN or ±inf value has no 2^60 decimal form: the exact mean of a
+    coordinate holding one is NaN or the infinity, as ``avg`` gives,
+    instead of dropping the value from the sum while counting it in n.
+    Finite coordinates keep the exact mean, and a centroid whose only
+    member has a NaN is a NaN literal, not a null."""
+    nan, inf = float("nan"), float("inf")
+    schema = "vec_id bigint, embedding array<double>"
+    rows = [(i, [float(i), 1.0, 0.5, 1.0]) for i in range(20)]
+    rows += [(20, [nan, 1.0, inf, -inf]), (21, [1.0, 1.0, 0.5, inf])]
+    mu = sim._exact_means(spark.createDataFrame(rows, schema))
+    assert math.isnan(mu[0]) and mu[1] == 1.0 and mu[2] == inf and math.isnan(mu[3])
+    assert list(sim._exact_means(spark.createDataFrame(rows[:20], schema))) == [9.5, 1.0, 0.5, 1.0]
+    emb = spark.createDataFrame([(0, [nan, 0.0]), (1, [1.0, 1.0])], schema)
+    got = {r["vec_id"]: (r["cluster"], r["dist"]) for r in sim.kmeans_assign(emb, k=2).collect()}
+    assert got[0][0] == 0 and math.isnan(got[0][1])
+    assert got[1] == (1, 0.0)
 
 
 def test_semantic_dedup_plants(spark):

@@ -115,3 +115,19 @@ def test_pq_encode_is_one_arrow_map_without_shuffle(spark, sf_dir):
     p = plan_of(spark, sim.pq_encode(load_table(spark, sf_dir, "embeddings")))
     assert len(re.findall(r"\(\d+\) MapInArrow", p)) == 1, p
     assert "Exchange" not in p, p
+
+
+def test_ivfpq_residual_encode_is_one_arrow_map(spark, sf_dir):
+    # the IVFPQ residual codes come from the same PQ assignment kernel:
+    # one Arrow map, and no per-residual-centroid array_min lambda over
+    # a broadcast (rid, rv) book
+    import re
+
+    from airflow_crypto_etl_spark.operators import similarity as sim
+    from airflow_crypto_etl_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    p = plan_of(spark, sim.ivfpq_topk(emb, list(range(8)), k=10))
+    assert len(re.findall(r"\(\d+\) MapInArrow", p)) == 1, p
+    assert not re.search(r"lambda \w+#\d+\.rv", p), p
+    assert "array_min" in p, p  # the coarse assignment stays a SQL lambda

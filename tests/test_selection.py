@@ -554,6 +554,65 @@ def test_ivfpq_recall_bounds(spark, sf_dir):
         assert 0.0 <= r["recall"] <= 1.0
 
 
+def _search_rows(df):
+    """{query_id: [(neighbor_id, adc), ...]} of a PQ/IVFPQ search, by rank."""
+    got: dict[int, list] = {}
+    for r in df.orderBy("query_id", "rank").collect():
+        got.setdefault(r["query_id"], []).append((r["neighbor_id"], r["adc"]))
+    return got
+
+
+def test_ivfpq_adc_table_is_keyed_by_rid(spark, sf_dir):
+    """The IVFPQ lookup table maps a residual-book id to its distance,
+    so a book's ids need not be 0..n-1: the seed book with every rid
+    shifted by 100 searches exactly as the seeded default, and a book
+    missing rid 3 (a corpus without that seed id) matches the Python
+    reference over the same book."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = _emb_rows()
+    resid = _py_residuals(rows)
+    book = {rid: resid[rid + 16] for rid in range(16)}
+
+    def search(rcb):
+        df = spark.createDataFrame(list(rcb.items()), "rid bigint, rv array<double>")
+        return _search_rows(sim.ivfpq_topk(emb, list(range(8)), k=10, rcb_rows=df))
+
+    seeded = _search_rows(sim.ivfpq_topk(emb, list(range(8)), k=10))
+    assert len(seeded) == 8
+    assert search({rid + 100: rv for rid, rv in book.items()}) == seeded
+    gapped = {rid: rv for rid, rv in book.items() if rid != 3}
+    ref = _py_ivfpq(rows, rcb=gapped)
+    assert search(gapped) == {q: list(v) for q, v in ref.items()}
+
+
+@pytest.mark.parametrize("dim", [32, 96])
+def test_pq_and_ivfpq_take_the_dimension_from_the_book(spark, dim):
+    """Every PQ and IVFPQ entry point splits the book's dimension: on a
+    seeded 40-vector corpus of 32 or 96 dims, the encode, the append,
+    the rebuild-per-call and persisted-index searches and the IVFPQ
+    search equal the Python reference at that dimension."""
+    rng = random.Random(1000 + dim)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    # the reference sees the float32 values Spark stores
+    ref_rows = [(i, [float(x) for x in np.float32(v)]) for i, v in rows]
+    vecs = dict(ref_rows)
+    seeded = {cid: vecs[cid] for cid in range(16)}
+    want_codes = {i: _py_pq_codes(v, seeded, 4, dim // 4) for i, v in vecs.items()}
+    codes_of = lambda df: {r["vec_id"]: r["codes"] for r in df.collect()}  # noqa: E731
+    assert codes_of(sim.pq_encode(emb)) == want_codes
+    codebook, codes = sim.pq_index_build(emb, trained=False)
+    assert codes_of(codes) == want_codes
+    assert codes_of(sim.pq_index_append(emb, codebook)) == want_codes
+    ids = list(range(8))
+    want = {q: list(v) for q, v in _py_pq(ref_rows, dim=dim).items()}
+    assert _search_rows(sim.pq_topk(emb, ids, k=10)) == want
+    batch = emb.filter(F.col("vec_id").isin(ids))
+    assert _search_rows(sim.pq_index_lookup(batch, codebook, codes, k=10)) == want
+    want = {q: list(v) for q, v in _py_ivfpq(ref_rows, dim=dim).items()}
+    assert _search_rows(sim.ivfpq_topk(emb, ids, k=10)) == want
+
+
 
 @pytest.mark.parametrize(
     "name", ["q_ann_pq_index_lookup", "q_ann_index_append", "q_dedup_index_compact"]
@@ -1038,6 +1097,11 @@ def test_trained_books_survive_a_null_seed_element(spark, monkeypatch):
         ("q_ann_ivf_trained", 16),
         ("q_ann_pq_trained", 9),
         ("q_ann_ivfpq_trained", 17),
+        # the IVFPQ residual codes are one pq_assign pass against the
+        # driver-side residual book; the coarse book is collected once
+        ("q_ann_ivfpq", 10),
+        ("q_ann_ivfpq_recall", 13),
+        ("q_ann_ivfpq_coarse_trained", 18),
         ("q_ann_index_retrain", 20),
     ],
 )
