@@ -22,6 +22,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .operators.layout import local_rows
+
 
 @dataclass(frozen=True)
 class Expectation:
@@ -215,7 +217,7 @@ def enforce_ge_suite(df: DataFrame, path: str) -> DataFrame:
         raise CheckFailure(
             "; ".join(f"{r['check']}: {r['n_failed']} failing rows" for r in failed)
         )
-    return df.sparkSession.createDataFrame(rows, schema=report.schema)
+    return local_rows(df.sparkSession, rows, report.schema)
 
 
 def freshness(df: DataFrame, partition_col: str, expected_value) -> None:

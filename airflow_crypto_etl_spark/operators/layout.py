@@ -1,5 +1,6 @@
 """Data layout: Z-order (Morton) clustering for data-skipping scans,
-the widening repartition, and the synthetic-payload generator.
+the widening repartition, the synthetic-payload generator and the
+JVM-local relation of driver rows.
 
 A 100 TB fact table is usually range-partitioned on ONE key (date); a
 query filtering on a second key (customer) then reads every file. A
@@ -16,7 +17,8 @@ inside whole-stage codegen — no UDF.
 :func:`widen` is the one caller-gated repartition that spreads a narrow
 scan over every core before CPU-heavy per-row work. :func:`payload_rows`
 makes the media attach verbs' payloads inside the task that consumes
-them, so payload bytes never cross an exchange. Nothing here imports
+them, so payload bytes never cross an exchange. :func:`local_rows` is
+how a book the driver already holds goes back into a plan. Nothing here imports
 from the package, so any operator module can import it at top level.
 """
 
@@ -25,9 +27,11 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 Z_BITS = 16
 
@@ -105,3 +109,46 @@ def payload_rows(ids: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
 
     schema = T.StructType([id_field, T.StructField("payload", T.BinaryType())])
     return ids.mapInPandas(batches, schema)
+
+
+def _nested_nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every struct field nullable; arrays and maps keep
+    their own null flags."""
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _nested_nullable(f.dataType), True, f.metadata) for f in t])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nested_nullable(t.elementType), t.containsNull)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nested_nullable(t.keyType), _nested_nullable(t.valueType), t.valueContainsNull)
+    return t
+
+
+def local_rows(spark: SparkSession, rows: list, schema: T.StructType | str) -> DataFrame:
+    """``rows`` (tuples or Rows the driver holds) as a JVM-local Arrow
+    relation of ``schema`` (a ``StructType`` or DDL text).
+
+    ``createDataFrame(list)`` is RDD-backed in classic PySpark: every
+    collect or broadcast of it runs a Spark job and a Python task. This
+    relation is a ``LocalTableScan``, so collecting it runs no job.
+    Values convert as Spark Connect converts local rows: a naive
+    timestamp is local time, as ``createDataFrame(list)`` reads it.
+
+    A struct field below the top level comes back nullable: pyspark's
+    Arrow path rebuilds nested struct arrays without their non-null
+    flags and then cannot cast them back. Top-level fields keep theirs.
+
+    Catalyst evaluates a projection over this relation on the driver,
+    and plans built on one lambda projection of it share its lambda
+    variables: never run two such plans from two threads at once (see
+    ``similarity.ivf_centroids_trained``)."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    schema = T.StructType(
+        [T.StructField(f.name, _nested_nullable(f.dataType), f.nullable, f.metadata) for f in schema]
+    )
+    table = (
+        LocalDataToArrowConversion.convert(rows, schema, False)
+        if rows
+        else to_arrow_schema(schema).empty_table()
+    )
+    return spark.createDataFrame(table, schema)

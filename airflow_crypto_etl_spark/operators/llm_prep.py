@@ -19,7 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .layout import local_rows
 from .text import tokens_col
 
 # ---------------------------------------------------------------------------
@@ -317,9 +319,10 @@ def mixture_rebalance(
     spark = df.sparkSession
     # Weights as a table (not a map lookup on counts): a target source
     # with ZERO corpus rows then still contributes a cap_s = 0 row.
-    wdf = spark.createDataFrame(
+    wdf = local_rows(
+        spark,
         [(k, int(v)) for k, v in target_weights.items()],
-        f"{source_col} string, _mr_w bigint",
+        T.StructType([T.StructField(source_col, T.StringType()), T.StructField("_mr_w", T.LongType())]),
     )
     counts = (
         wdf.join(

@@ -56,6 +56,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .layout import local_rows
+
 # (column name, ascending) — the public order spec. Nulls unsupported
 # (rank statistics over aggregates never produce them here).
 OrderSpec = Sequence[tuple[str, bool]]
@@ -171,7 +173,7 @@ def _offset_join(
     fields.append(StructField(out_col, LongType()))
     schema = StructType(fields)
     rows = [tuple(k) + (int(v),) for k, v in mapping.items()]
-    lut = d.sparkSession.createDataFrame(rows, schema)
+    lut = local_rows(d.sparkSession, rows, schema)
     joined = d.join(F.broadcast(lut), on=list(key_cols), how="left")
     return joined.withColumn(out_col, F.coalesce(F.col(out_col), F.lit(0).cast("long")))
 
@@ -431,4 +433,4 @@ def literal_frame(df: DataFrame) -> DataFrame:
     Driver state is len(df) rows: callers must only pass frames whose
     cardinality is bounded by construction (one row per group)."""
     rows = df.collect()
-    return df.sparkSession.createDataFrame(rows, df.schema)
+    return local_rows(df.sparkSession, rows, df.schema)

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .layout import widen
+from .layout import local_rows, widen
 
 LSH_PLANES = 8
 
@@ -127,7 +127,7 @@ def _book_literal_ok(rows: list, max_cells: int = None) -> bool:
     a bare ``array()`` literal types as array<string> and breaks the
     downstream struct-field access at analysis time — and non-finite
     doubles (nan/inf) repr to SQL text the parser rejects. Both cases
-    degrade gracefully on the createDataFrame/broadcast branch, which
+    degrade gracefully on the local-relation/broadcast branch, which
     carries an explicit schema and binary doubles. So does a null
     vector, element or extra field: a SQL null has no literal here."""
     import math
@@ -165,8 +165,8 @@ def _with_book(df: DataFrame, rows: list, name: str) -> DataFrame:
     job); any other is a broadcast 1-row relation of the same type."""
     if _book_literal_ok(rows):
         return df.withColumn(name, F.expr(_book_literal_sql(rows)))
-    book = df.sparkSession.createDataFrame(
-        [(rows,)], f"{name} array<struct<cid: bigint, cv: array<double>, cn: double>>"
+    book = local_rows(
+        df.sparkSession, [(rows,)], f"{name} array<struct<cid: bigint, cv: array<double>, cn: double>>"
     )
     return df.crossJoin(F.broadcast(book))
 
@@ -1141,6 +1141,11 @@ def ivf_centroids_trained(
         f"array({cid}) AS codes", "v"
     )
     rows = _lloyd_update(assigned, [(c, cv) for c, cv, _cn in seed_rows], 1)
+    # Not layout.local_rows: ivf_index_build projects these rows through
+    # lambdas, and Catalyst folds a projection over a local relation on
+    # the driver with lambda variables that every plan sharing it shares.
+    # ivf_index_retrain's two index writes, run from two threads, then
+    # race and can assign vectors to the wrong lists.
     return emb.sparkSession.createDataFrame(rows, "cid bigint, cv array<double>")
 
 
@@ -1831,7 +1836,7 @@ def pq_codebook_trained(
     and :func:`pq_topk` take.
     """
     rows = _pq_trained_rows(emb, n_sub, n_cent, id_col, vec_col)
-    return emb.sparkSession.createDataFrame(rows, "cid bigint, cv array<double>")
+    return local_rows(emb.sparkSession, rows, "cid bigint, cv array<double>")
 
 
 def pq_encode(
@@ -1894,7 +1899,7 @@ def pq_topk(
     :func:`pq_codebook_trained` for the trained searcher."""
     base = emb.select(F.col(id_col), _to_double(F.col(vec_col)).alias("v"))
     book = _pq_book(emb, n_cent, id_col, vec_col, codebook)
-    cents = emb.sparkSession.createDataFrame(book, "cid bigint, cv array<double>")
+    cents = local_rows(emb.sparkSession, book, "cid bigint, cv array<double>")
     codes = _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub)
     queries = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col("v").alias("qv")
@@ -2028,7 +2033,7 @@ def pq_index_build(
         book = _pq_trained_rows(emb, n_sub, n_cent, id_col, vec_col)
     else:
         book = _pq_seed_rows(emb, n_cent, id_col, vec_col)
-    codebook = emb.sparkSession.createDataFrame(book, "cid bigint, cv array<double>")
+    codebook = local_rows(emb.sparkSession, book, "cid bigint, cv array<double>")
     codes = _pq_code_map(emb.select(F.col(id_col), F.col(vec_col)), book, n_sub)
     return codebook, codes
 
@@ -2346,8 +2351,8 @@ def _ivfpq_resid(
             F.col(id_col).alias("cid"), F.col("v").alias("cv")
         )
     book = sorted(((r["cid"], r["cv"]) for r in src.collect()), key=lambda r: r[0])
-    coarse_cb = emb.sparkSession.createDataFrame(
-        [(book,)], "ccb array<struct<cid: bigint, cv: array<double>>>"
+    coarse_cb = local_rows(
+        emb.sparkSession, [(book,)], "ccb array<struct<cid: bigint, cv: array<double>>>"
     )
     resid = (
         base.crossJoin(F.broadcast(coarse_cb))
@@ -2403,7 +2408,7 @@ def ivfpq_residual_codebook_trained(
     seed_list = _ivfpq_seed_rcb(resid, n_coarse, n_rcent, id_col)
     codes = _pq_code_map(resid.select(F.col("r").alias("v")), seed_list, n_sub)
     rows = _lloyd_update(codes, seed_list, n_sub)
-    return emb.sparkSession.createDataFrame(rows, "rid bigint, rv array<double>")
+    return local_rows(emb.sparkSession, rows, "rid bigint, rv array<double>")
 
 
 def ivfpq_topk(
@@ -2480,7 +2485,7 @@ def ivfpq_topk(
         )
     )
     # per-(query, probed list) ADC lookup table over the residual codebook
-    rcb_df = emb.sparkSession.createDataFrame(rcb, "rid bigint, rv array<double>")
+    rcb_df = local_rows(emb.sparkSession, rcb, "rid bigint, rv array<double>")
     lut = (
         probed.crossJoin(F.broadcast(rcb_df))
         .withColumn("s", F.expr(f"explode(sequence(0, {n_sub - 1}))"))

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import os
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
@@ -41,6 +40,7 @@ from pyspark.sql.observation import Observation
 from .. import checks
 from ..operators import aggregate as agg_ops
 from ..operators import transform as tf
+from ..operators.layout import local_rows
 from ..session import apply_runtime_confs
 from ..sinks import writers
 
@@ -60,7 +60,7 @@ def bronze_ingest(spark: SparkSession, records: list[dict]) -> DataFrame:
     """Bronze from extracted records (S1 feeds this; schema-on-read —
     pyspark infers from the JSON structure, nothing enforced).
 
-    The JSON lines become a JVM-local relation (Arrow, explicit
+    The JSON lines become a JVM-local relation (``local_rows``, explicit
     ``value string`` schema so ``[]`` still yields ``struct<>``) and are
     parsed through the reader's ``Dataset[String]`` entry point: the
     same inference ``read.json(RDD)`` delegates to, without sending
@@ -68,7 +68,7 @@ def bronze_ingest(spark: SparkSession, records: list[dict]) -> DataFrame:
     apply_runtime_confs(spark)
     import json
 
-    lines = spark.createDataFrame(pa.table({"value": [json.dumps(r) for r in records]}), "value string")
+    lines = local_rows(spark, [(json.dumps(r),) for r in records], "value string")
     as_strings = getattr(lines._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
     return DataFrame(spark._jsparkSession.read().json(as_strings), spark)
 

@@ -43,6 +43,7 @@ from .operators import joins as join_ops
 from .operators import transform as tf
 from .operators import upsert as upsert_ops
 from .operators import windows as win_ops
+from .operators.layout import local_rows
 from .session import apply_runtime_confs
 from .sources.tables import load_table
 
@@ -505,7 +506,8 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (band) join: bucket event values into fixed bands via a
     broadcast interval table."""
     ev = _t(spark, sf_dir, "events")
-    buckets = spark.createDataFrame(
+    buckets = local_rows(
+        spark,
         [("low", 0.0, 50.0), ("mid", 50.0, 200.0), ("high", 200.0, 1e9)],
         T.StructType([
             T.StructField("band", T.StringType(), False),

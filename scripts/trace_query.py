@@ -146,8 +146,6 @@ def main(argv=None) -> int:
     if missing:
         print(f"unknown queries: {missing}", file=sys.stderr)
         return 2
-    # Python workers import the package whatever the working directory
-    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
     spark = get_spark(app_name="trace-query", extra_conf={"spark.ui.showConsoleProgress": "false"})
     tracer = Tracer(spark)
     out: dict = {}

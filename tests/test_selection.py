@@ -1090,16 +1090,17 @@ def test_trained_books_survive_a_null_seed_element(spark, monkeypatch):
         # the base and each appended slice are one pq_assign pass each;
         # a Python task has a fixed cost, so extra passes show as time
         ("q_ann_pq_index_append", 14),
-        ("q_ann_pq_index_health", 13),
+        ("q_ann_pq_index_health", 11),
         # the trained books: each Lloyd round is one collect of its seeds
-        # and one of the update's cell means
+        # and one of the update's cell means; a book the driver holds is
+        # a local relation, so collecting it back runs no job
         ("q_kmeans", 4),
         ("q_ann_ivf_trained", 16),
         ("q_ann_pq_trained", 9),
-        ("q_ann_ivfpq_trained", 17),
+        ("q_ann_ivfpq_trained", 13),
         # the IVFPQ residual codes are one pq_assign pass against the
         # driver-side residual book; the coarse book is collected once
-        ("q_ann_ivfpq", 10),
+        ("q_ann_ivfpq", 9),
         ("q_ann_ivfpq_recall", 13),
         ("q_ann_ivfpq_coarse_trained", 18),
         ("q_ann_index_retrain", 20),
