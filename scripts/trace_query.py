@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Attribute a query's Spark work to its construct, its execute and each job.
 
-Per query: one warm-up run, then one run traced by perfbench's
+Per query: one warm-up run in the traced run's form, then one run traced by perfbench's
 ``Tracer``: the query is built in a ``construct`` span and executed
 through the noop sink (every column computed) in an ``execute`` span.
 A span's id is the Spark job group while it is open, so every job,
@@ -38,17 +38,24 @@ from tracing import Tracer, union_s  # noqa: E402
 FIRST_LINE = ("rows", "construct_s", "execute_s", "driver_gap_s", "jobs", "jobs_outside_spans", "timeline")
 
 
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def _noop(df):
+    """Run ``df`` through the noop sink, observing its row count; returns
+    the ``Observation``. The warm-up runs this same form: a session's
+    first observed action pays a one-time driver cost (0.4-0.6 s at
+    sf0.01, outside every stage) that would otherwise land in the first
+    traced query."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    rows = Observation()
+    df.observe(rows, F.count(F.lit(1)).alias("rows")).write.format("noop").mode("overwrite").save()
+    return rows
 
 
 def trace(tracer: Tracer, name: str, fn, sf_dir: str) -> dict:
     """Warm ``fn(spark, sf_dir)`` up once, then construct and execute it
     traced; returns the traced run's record. The Tracer is uninstalled
     and caches released even when the query raises."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     from airflow_crypto_etl_spark.operators import dedup
 
     spark, sc = tracer.spark, tracer.sc
@@ -65,9 +72,8 @@ def trace(tracer: Tracer, name: str, fn, sf_dir: str) -> dict:
         with tracer.span(name, "queries", op=name) as op:
             with tracer.span("construct", "queries") as construct:
                 df = fn(spark, sf_dir)
-            rows = Observation()
             with tracer.span("execute", "queries") as execute:
-                _noop(df.observe(rows, F.count(F.lit(1)).alias("rows")))
+                rows = _noop(df)
         # job and stage events reach the status store through the bus
         bus.waitUntilEmpty()
         spans = tracer.spans[mark:]

@@ -118,9 +118,10 @@ def test_pq_encode_is_one_arrow_map_without_shuffle(spark, sf_dir):
 
 
 def test_ivfpq_residual_encode_is_one_arrow_map(spark, sf_dir):
-    # the IVFPQ residual codes come from the same PQ assignment kernel:
-    # one Arrow map, and no per-residual-centroid array_min lambda over
-    # a broadcast (rid, rv) book
+    # the IVFPQ residual codes come from the PQ assignment kernel, and
+    # the coarse assignment and the probes from the nearest-centroid
+    # kernel: three Arrow maps, and no array_min lambda over a
+    # broadcast coarse or (rid, rv) book
     import re
 
     from airflow_crypto_etl_spark.operators import similarity as sim
@@ -128,6 +129,20 @@ def test_ivfpq_residual_encode_is_one_arrow_map(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     p = plan_of(spark, sim.ivfpq_topk(emb, list(range(8)), k=10))
-    assert len(re.findall(r"\(\d+\) MapInArrow", p)) == 1, p
+    assert len(re.findall(r"\(\d+\) MapInArrow", p)) == 3, p
     assert not re.search(r"lambda \w+#\d+\.rv", p), p
-    assert "array_min" in p, p  # the coarse assignment stays a SQL lambda
+    assert "array_min" not in p and "ccb" not in p, p
+
+
+def test_ivf_assignment_is_an_arrow_map_without_argmax_shuffle(spark, sf_dir):
+    # the IVF corpus assignment and the probes are nearest-centroid
+    # kernel passes: no centroid product join, no max_by aggregate
+    import re
+
+    from airflow_crypto_etl_spark.operators import similarity as sim
+    from airflow_crypto_etl_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    p = plan_of(spark, sim.ivf_topk(emb, list(range(8)), k=10))
+    assert len(re.findall(r"\(\d+\) MapInArrow", p)) == 2, p
+    assert "max_by" not in p and "BroadcastNestedLoopJoin" not in p, p

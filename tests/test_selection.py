@@ -295,6 +295,37 @@ def _py_d2(a, b):
     return acc
 
 
+def _py_dot(a, b):
+    """Dot product as Spark's sequential fold, with :func:`_py_d2`'s
+    null rules."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        if x is None or y is None:
+            return None
+        acc = acc + x * y
+    return acc
+
+
+def _py_best(scored, metric):
+    """The cid of the best (score, cid) pair in Spark's order: for
+    ``cos`` the maximum, NaN highest and a null lowest (``max_by`` over
+    ``struct(score, -cid)``); for ``l2`` the minimum, a null first and
+    NaN last (``array_min`` over ``struct(d, cid)``); ties to the
+    smaller cid."""
+
+    def key(sc):
+        s, cid = sc
+        if s is None:
+            return (2 if metric == "cos" else 0, 0.0, cid)
+        if math.isnan(s):
+            return (0 if metric == "cos" else 2, 0.0, cid)
+        return (1, -s if metric == "cos" else s, cid)
+
+    return min(scored, key=key)[1]
+
+
 def _py_pq_codes(v, cents, n_sub=4, sd=16):
     """Per subspace, the cid of Spark's ``array_min`` over
     ``struct(d, cid)``: a null ``d`` sorts first, NaN after every number,
@@ -712,6 +743,17 @@ def _close(a: float, b: float) -> bool:
     return math.isclose(a, b, rel_tol=1e-12, abs_tol=1e-15)
 
 
+def _py_mean(values):
+    """The engine's exact mean of one cell (``similarity._exact_mean``):
+    the 2^60-scaled integer sum of the non-null values over the count
+    of them all (Spark's ``sum`` skips a null, ``count`` does not);
+    None when every value is null."""
+    vals = [x for x in values if x is not None]
+    if not vals:
+        return None
+    return float(sum(_q60(x) for x in vals)) / _POW2_60_F / len(values)
+
+
 def _py_train_subspace_round(vecs_by_key, seed_cents, n_sub=4, dim=64):
     """One Lloyd round per subspace over ``vecs_by_key`` (exact
     integer sums of 2^60-scaled coordinates, one float division chain
@@ -719,25 +761,20 @@ def _py_train_subspace_round(vecs_by_key, seed_cents, n_sub=4, dim=64):
     the new full-dim centroid dict; empty cells keep seed values."""
     sd = dim // n_sub
 
-    def d2(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
     def sub(v, s):
-        return v[s * sd : (s + 1) * sd]
+        return None if v is None else v[s * sd : (s + 1) * sd]
 
     new = {cid: list(cv) for cid, cv in seed_cents.items()}
     for s in range(n_sub):
         groups: dict[int, list] = {}
         for _vid, v in sorted(vecs_by_key.items()):
-            best = min((d2(sub(v, s), sub(cv, s)), cid) for cid, cv in sorted(seed_cents.items()))[1]
-            groups.setdefault(best, []).append(v)
+            scored = [(_py_d2(sub(v, s), sub(cv, s)), cid) for cid, cv in seed_cents.items()]
+            groups.setdefault(_py_best(scored, "l2"), []).append(v)
         for cid, members in groups.items():
-            for i in range(sd):
-                total = sum(_q60(m[s * sd + i]) for m in members)
-                new[cid][s * sd + i] = float(total) / _POW2_60_F / len(members)
+            # a null vector has no slice to average
+            members = [m for m in members if m is not None]
+            for i in range(sd if members else 0):
+                new[cid][s * sd + i] = _py_mean([m[s * sd + i] for m in members])
     return new
 
 
@@ -772,21 +809,25 @@ def test_pq_trained_search_matches_python_reference(spark, sf_dir):
 
 
 def _py_residuals(rows, n_coarse=16):
-    vecs = {vid: [float(x) for x in v] for vid, v in rows}
+    """Each vector's residual against its nearest seed coarse centroid
+    (l2, Spark's order), with ``zip_with``'s nulls."""
+    vecs = {
+        vid: None if v is None else [None if x is None else float(x) for x in v]
+        for vid, v in rows
+    }
     coarse = {cid: vecs[cid] for cid in range(n_coarse)}
 
-    def d2(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
+    def minus(v, c):
+        if v is None or c is None:
+            return None
+        return [
+            None if i >= min(len(v), len(c)) or v[i] is None or c[i] is None else v[i] - c[i]
+            for i in range(max(len(v), len(c)))
+        ]
 
-    assign = {
-        vid: min((d2(v, cv), cid) for cid, cv in sorted(coarse.items()))[1]
-        for vid, v in vecs.items()
-    }
     return {
-        vid: [x - y for x, y in zip(v, coarse[assign[vid]])] for vid, v in vecs.items()
+        vid: minus(v, coarse[_py_best([(_py_d2(v, c), cid) for cid, c in coarse.items()], "l2")])
+        for vid, v in vecs.items()
     }
 
 
@@ -851,36 +892,20 @@ def _py_train_fulldim_round(vecs, seed_cents, metric, dim=64):
     arithmetic matching the engine's codegen order, then exact
     2^60-scaled integer mean updates; empty clusters keep seeds."""
 
-    def d2(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
+    def cos(v, c):
+        d = _py_dot(v, c)
+        return None if d is None else d / (math.sqrt(_py_dot(v, v)) * math.sqrt(_py_dot(c, c)))
 
-    def dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    norms = {vid: math.sqrt(dot(v, v)) for vid, v in vecs.items()}
-    cnorm = {cid: math.sqrt(dot(c, c)) for cid, c in seed_cents.items()}
+    score = cos if metric == "cos" else _py_d2
     groups: dict[int, list] = {}
-    for vid, v in sorted(vecs.items()):
-        if metric == "cos":
-            best = max(
-                (dot(v, c) / (norms[vid] * cnorm[cid]), -cid)
-                for cid, c in seed_cents.items()
-            )
-            cid = -best[1]
-        else:
-            cid = min((d2(v, c), cid) for cid, c in seed_cents.items())[1]
-        groups.setdefault(cid, []).append(v)
+    for _vid, v in sorted(vecs.items()):
+        scored = [(score(v, c), cid) for cid, c in seed_cents.items()]
+        groups.setdefault(_py_best(scored, metric), []).append(v)
     new = {cid: list(cv) for cid, cv in seed_cents.items()}
     for cid, members in groups.items():
-        for j in range(dim):
-            total = sum(_q60(m[j]) for m in members)
-            new[cid][j] = float(total) / _POW2_60_F / len(members)
+        members = [m for m in members if m is not None]
+        for j in range(dim if members else 0):
+            new[cid][j] = _py_mean([m[j] for m in members])
     return new
 
 
@@ -908,6 +933,143 @@ def test_ivf_centroids_trained_rejects_an_unknown_metric_before_any_job(
     with spark_jobs() as jobs, pytest.raises(ValueError, match="unknown metric"):
         sim.ivf_centroids_trained(emb, metric="ip")
     assert jobs.n == 0
+
+
+def _kernel_battery(spark):
+    """(vectors, book) frames whose rows hit every rule of the
+    nearest-centroid kernel: a null vector and a null element, NaN and
+    ±inf, a shorter and a longer vector, a vector equal to a centroid,
+    duplicate centroids (exact ties), and book rows that are short,
+    non-finite or hold a null."""
+    nan, inf = float("nan"), float("inf")
+    rng = random.Random(11)
+    book = [(cid, [round(rng.gauss(0, 1), 2) for _ in range(4)]) for cid in range(8)]
+    book[5] = (5, list(book[2][1]))  # exact tie with cid 2
+    book[6] = (6, [1.0, nan, 0.5, 0.5])
+    book[7] = (7, [1.0, 2.0, 3.0])
+    book.append((9, [0.5, None, 1.0, 1.0]))
+    book.append((12, [inf, 1.0, 1.0, 1.0]))
+    vecs = [(i, [round(rng.gauss(0, 1), 2) for _ in range(4)]) for i in range(12)]
+    vecs += [
+        (20, None), (21, [1.0, None, 2.0, 0.5]), (22, [nan, 1.0, 1.0, 1.0]),
+        (23, [inf, 1.0, 1.0, 1.0]), (24, [-inf, 0.0, 1.0, 1.0]), (25, [1.0, 2.0, 3.0]),
+        (26, [1.0, 2.0, 3.0, 4.0, 5.0]), (27, list(book[3][1])), (28, [2 * x for x in book[2][1]]),
+    ]
+    schema = "id bigint, v array<double>"
+    return spark.createDataFrame(vecs, schema), book
+
+
+@pytest.mark.parametrize("metric", ["cos", "l2"])
+def test_nearest_centroid_kernel_matches_spark(spark, metric):
+    """Every rule of ``similarity.nearest_centroids`` pinned against the
+    SQL forms it replaced: the top-3 picks and scores equal a
+    ``row_number`` window over the ``dot_sql``/``d2_sql`` scores (cos
+    desc, d2 asc, then cid), the top pick equals ``max_by`` over
+    ``struct(cos, -cid)`` / ``array_min`` over ``struct(d2, cid)``, and
+    the residual equals ``zip_with(v, cv, (x, y) -> x - y)``; every
+    double bit for bit, null and NaN included."""
+    from pyspark.sql import Window
+
+    vecs, book = _kernel_battery(spark)
+    bk = spark.createDataFrame(book, "cid bigint, cv array<double>")
+    if metric == "cos":
+        score = f"{sim.dot_sql('v', 'cv')} / ({sim.norm2_sql('v')} * {sim.norm2_sql('cv')})"
+        order = [F.col("score").desc(), F.col("cid").asc()]
+    else:
+        score = sim.d2_sql("v", "cv")
+        order = [F.col("score").asc(), F.col("cid").asc()]
+    pairs = vecs.crossJoin(bk).select(
+        "id", "cid", F.expr(score).alias("score"),
+        F.expr("zip_with(v, cv, (x, y) -> x - y)").alias("r"),
+    )
+    w = Window.partitionBy("id").orderBy(*order)
+    want = pairs.withColumn("rank", F.row_number().over(w)).filter("rank <= 3")
+    got = sim._nearest_map(vecs, book, metric, 3, resid=True).withColumn(
+        "rank", F.row_number().over(Window.partitionBy("id").orderBy(F.monotonically_increasing_id()))
+    )
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.select("id", "rank", "cid", "score", "r").collect())
+
+    assert rows(got) == rows(want)
+    if metric == "cos":
+        best = pairs.groupBy("id").agg(
+            F.max_by("cid", F.struct("score", (-F.col("cid")).alias("n"))).alias("cid")
+        )
+    else:
+        best = vecs.crossJoin(
+            spark.createDataFrame([(book,)], "b array<struct<cid: bigint, cv: array<double>>>")
+        ).selectExpr("id", f"array_min(transform(b, e -> struct({sim.d2_sql('v', 'e.cv')} AS d, e.cid AS cid))).cid AS cid")
+    one = sim._nearest_map(vecs, book, metric).select("id", "cid")
+    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, best.collect()))
+    assert one.count() == vecs.count() == 21
+
+
+def _zero_norm_corpus(spark, zero_id):
+    rng = random.Random(5)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(40)]
+    rows[zero_id] = (zero_id, [0.0] * 8)
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+
+
+def test_a_zero_norm_vector_fails_with_the_module_error(spark, tmp_path):
+    """A zero-norm vector has no cosine. As a seed centroid it raises
+    ValueError naming the cid on the driver, before the assignment
+    runs; as a corpus, batch or query vector it fails the kernel task
+    with a message naming its id. Under l2 the same corpora train."""
+    seed0, row20 = _zero_norm_corpus(spark, 0), _zero_norm_corpus(spark, 20)
+    clean = _zero_norm_corpus(spark, 39).filter("vec_id < 39")
+    cents, assign = sim.ivf_index_build(clean, spread=False)
+    cents.write.parquet(str(tmp_path / "centroids"))
+    cents_p = spark.read.parquet(str(tmp_path / "centroids"))
+    zero_book = cents_p.withColumn(
+        "cv", F.when(F.col("cid") == 4, F.array_repeat(F.lit(0.0), 8)).otherwise(F.col("cv"))
+    )
+    seed_cases = [
+        lambda: sim.ivf_index_build(seed0, spread=False)[1].collect(),
+        lambda: sim.ivf_topk(seed0, [1, 2], k=5).collect(),
+        lambda: sim.ivf_centroids_trained(seed0, metric="cos", spread=False).collect(),
+    ]
+    for case in seed_cases:
+        with pytest.raises(ValueError, match="centroid 0 has zero norm"):
+            case()
+    with pytest.raises(ValueError, match="centroid 4 has zero norm"):
+        sim.ivf_index_lookup(clean, clean, zero_book, assign, spread=False).collect()
+    row_cases = [
+        lambda: sim.ivf_index_build(row20, spread=False)[1].collect(),
+        lambda: sim.ivf_topk(row20, [1, 2], k=5).collect(),
+        lambda: sim.ivf_centroids_trained(row20, metric="cos", spread=False).collect(),
+        lambda: sim.ivf_index_lookup(row20, clean, cents_p, assign, spread=False).collect(),
+    ]
+    for case in row_cases:
+        with pytest.raises(Exception, match="vector 20 has zero norm"):
+            case()
+    for emb in (seed0, row20):
+        assert sim.ivf_centroids_trained(emb, metric="l2", spread=False).count() == 16
+
+
+def test_ivf_index_retrain_gives_the_oracle_rows_every_run(spark, sf_dir, duck):
+    """q_ann_index_retrain writes its two index tables from two threads
+    over plans that share the trained book. With the book a local
+    relation, a lambda projection over it was folded on the driver with
+    shared lambda variables and could put vectors in the wrong lists;
+    the kernel holds the book in its closure, so every one of 20 runs
+    returns the DuckDB oracle's rows."""
+    import __spark_entry__ as entrymod
+    from airflow_crypto_etl_spark.operators.dedup import release_caches
+
+    def norm(rows):
+        return sorted((r[0], r[1], r[3], round(r[2], 9)) for r in rows)
+
+    want = norm(duck.execute(entrymod.oracle_sql()["q_ann_index_retrain"]).fetchall())
+    q = entrymod.queries()["q_ann_index_retrain"]
+    assert len(want) > 0
+    for _ in range(20):
+        try:
+            got = q(spark, sf_dir).select("query_id", "neighbor_id", "cos", "rank").collect()
+        finally:
+            release_caches()
+        assert norm(got) == want
 
 
 @pytest.mark.parametrize("dim", [32, 96])
@@ -1015,19 +1177,6 @@ def test_pq_index_stats_counts_degenerate_rows(spark, sf_dir):
     assert row["n_vecs"] == healthy + 2
 
 
-def test_book_literal_gate_rejects_empty_and_nonfinite():
-    """r11 ADVICE item 1: the literal-book plan form must fall back to
-    the typed broadcast relation for empty seed sets (array() types as
-    array<string>) and for non-finite doubles (repr text the SQL
-    parser rejects)."""
-    assert sim._book_literal_ok([(0, [1.0, 2.0]), (1, [3.0, 4.0])])
-    assert not sim._book_literal_ok([])
-    assert not sim._book_literal_ok([(0, [float("nan"), 1.0])])
-    assert not sim._book_literal_ok([(0, [1.0]), (1, [float("inf")])])
-    assert not sim._book_literal_ok([(0, [1.0, 2.0], float("nan"))])
-    assert not sim._book_literal_ok([(0, [0.0] * 5000)])
-
-
 def test_pq_index_build_codes_equal_append(spark, sf_dir):
     """The build-IS-append invariant as a TEST (r11 verdict item 6):
     pq_index_build encodes the corpus directly under its 1-row book
@@ -1049,35 +1198,39 @@ def test_pq_index_build_codes_equal_append(spark, sf_dir):
         assert got == want and len(got) > 0
 
 
-def test_trained_books_survive_a_null_seed_element(spark, monkeypatch):
-    """A seed vector with a null element is not a plan literal: the
-    trained quantizers take the typed broadcast branch and return the
-    same rows as with the literal form switched off, and the trained PQ
-    index still encodes every vector."""
+def test_trained_books_survive_a_null_seed_element(spark):
+    """A seed vector with a null element: its score is null against
+    every vector, which sorts lowest under ``cos`` and first under
+    ``l2``, and the update's mean skips the null. The three trained
+    quantizers equal the Python reference rounds under those rules, and
+    the trained PQ index still encodes every vector."""
     rng = random.Random(3)
     rows = [(i, [rng.gauss(0, 1) for _ in range(64)]) for i in range(200)]
     rows[3][1][7] = None
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    assert not sim._book_literal_ok([(0, None)])
-    assert not sim._book_literal_ok([(0, [1.0, None])])
-    assert not sim._book_literal_ok([(0, [1.0], None)])
-
-    def books():
-        return [
-            sorted(repr(tuple(r)) for r in fn().collect())
-            for fn in (
-                lambda: sim.ivf_centroids_trained(emb),
-                lambda: sim.ivf_centroids_trained(emb, metric="l2"),
-                lambda: sim.ivfpq_residual_codebook_trained(emb),
-            )
-        ]
-
-    got = books()
-    monkeypatch.setattr(sim, "_LIT_BOOK_MAX_CELLS", 0)
-    assert got == books()
+    vecs = {i: [None if x is None else float(np.float32(x)) for x in v] for i, v in rows}
+    seed = {cid: vecs[cid] for cid in range(16)}
+    resid = _py_residuals(list(vecs.items()))
+    want = {
+        "ivf_cos": _py_train_fulldim_round(vecs, seed, "cos"),
+        "ivf_l2": _py_train_fulldim_round(vecs, seed, "l2"),
+        "ivfpq": _py_train_subspace_round(resid, {rid: resid[rid + 16] for rid in range(16)}),
+    }
+    got = {
+        "ivf_cos": sim.ivf_centroids_trained(emb),
+        "ivf_l2": sim.ivf_centroids_trained(emb, metric="l2"),
+        "ivfpq": sim.ivfpq_residual_codebook_trained(emb),
+    }
+    for name, book in got.items():
+        book = {r[0]: list(r[1]) for r in book.collect()}
+        assert set(book) == set(want[name]), name
+        for cid, cv in book.items():
+            assert all(
+                a is b is None or (None not in (a, b) and _close(a, b))
+                for a, b in zip(cv, want[name][cid], strict=True)
+            ), (name, cid)
     codebook, codes = sim.pq_index_build(emb, trained=True)
     cents = {r["cid"]: r["cv"] for r in codebook.collect()}
-    vecs = {i: [None if x is None else float(np.float32(x)) for x in v] for i, v in rows}
     got = {r["vec_id"]: r["codes"] for r in codes.collect()}
     assert got == {i: _py_pq_codes(v, cents) for i, v in vecs.items()}
 
@@ -1095,20 +1248,29 @@ def test_trained_books_survive_a_null_seed_element(spark, monkeypatch):
         # and one of the update's cell means; a book the driver holds is
         # a local relation, so collecting it back runs no job
         ("q_kmeans", 4),
-        ("q_ann_ivf_trained", 16),
-        ("q_ann_pq_trained", 9),
-        ("q_ann_ivfpq_trained", 13),
+        ("q_ann_ivf_trained", 12),
+        ("q_ann_pq_trained", 8),
+        ("q_ann_ivfpq_trained", 10),
         # the IVFPQ residual codes are one pq_assign pass against the
-        # driver-side residual book; the coarse book is collected once
-        ("q_ann_ivfpq", 9),
-        ("q_ann_ivfpq_recall", 13),
-        ("q_ann_ivfpq_coarse_trained", 18),
-        ("q_ann_index_retrain", 20),
+        # driver-side residual book; the coarse assignment and the probes
+        # are nearest_centroids passes against the coarse book, which is
+        # collected once and never broadcast
+        ("q_ann_ivfpq", 7),
+        ("q_ann_ivfpq_recall", 10),
+        ("q_ann_ivfpq_coarse_trained", 11),
+        # every IVF assignment and probe is one nearest_centroids pass:
+        # no broadcast of the centroids, no argmax shuffle, no probe window
+        ("q_ann_ivf", 11),
+        ("q_ann_index_lookup", 15),
+        ("q_ann_index_append", 19),
+        ("q_ann_index_retrain", 17),
+        ("q_semantic_dedup", 10),
     ],
 )
 def test_pq_index_job_budget(spark, sf_dir, spark_jobs, name, budget):
-    """The persisted-PQ and trained-book queries stay within their Spark
-    job budget for a warm construct plus noop execute."""
+    """The persisted-index, IVF, IVFPQ, k-means and trained-book queries
+    stay within their Spark job budget for a warm construct plus noop
+    execute."""
     import __spark_entry__ as entrymod
     from airflow_crypto_etl_spark.operators.dedup import release_caches
 
