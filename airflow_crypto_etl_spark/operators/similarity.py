@@ -2361,8 +2361,7 @@ def _ivfpq_resid(
     map-only :func:`nearest_centroids` pass against it (minimum d2,
     residual v − cv). ``coarse_rows`` ((cid, cv) rows —
     :func:`ivf_centroids_trained` with ``metric="l2"``, this stage's
-    assignment metric) overrides the id-seeded coarse quantizer (r10
-    verdict item 1)."""
+    assignment metric) overrides the id-seeded coarse quantizer."""
     base = emb.select(F.col(id_col), F.expr(to_double_sql(_bt(vec_col))).alias("v"))
     coarse = _book_rows(emb, n_coarse, id_col, vec_col, coarse_rows)
     resid = _nearest_map(base, coarse, "l2", resid=True).select(
